@@ -347,6 +347,26 @@ def test_truncate_lineage_is_result_invariant(spark):
     assert verdicts(True) == verdicts(False)
 
 
+@pytest.mark.parametrize("algo", ["xxhash64", "md5"])
+def test_null_payloads_never_group(spark, algo):
+    """A null payload (fetch failed) is never byte-identical to anything
+    (G7). xxhash64 skips NULL inputs and concat_ws drops them, so
+    without a per-row key every null row shared the size-0 prefix key
+    and came out as one exact group. Two zero-length payloads still
+    group: they ARE byte-identical."""
+    rows = [
+        ("n1", None), ("n2", None), ("n3", None),
+        ("e1", bytearray(b"")), ("e2", bytearray(b"")),
+    ]
+    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    a = exact.exact_assignments(df, cfg=LadderConfig(algo=algo))
+    keys = {r.id: r.group_key for r in a.collect()}
+    assert len({keys["n1"], keys["n2"], keys["n3"], keys["e1"]}) == 4
+    assert keys["e1"] == keys["e2"]
+    groups = exact.groups_from_assignments(a, Factor.over(1)).collect()
+    assert [sorted(g["members"]) for g in groups] == [["e1", "e2"]]
+
+
 def test_truncate_lineage_materializes_narrow_once(spark):
     """With truncation on (the default) the union branches must all scan
     the checkpointed narrow RDD — the payload-hashing projection runs

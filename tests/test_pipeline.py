@@ -536,12 +536,73 @@ def test_gate_null_payloads_share_no_byte_band(spark):
     assert [r["image_id"] for r in g["novel"].collect()] == ["n1"]
 
 
+def test_null_payload_rows_never_cluster(spark):
+    """Fetch-failed rows (null bytes) with unrelated captions are not
+    byte duplicates of each other: each must come out as its own
+    singleton cluster, under both collapse settings."""
+    from yadf_spark.config import NearDupConfig
+
+    cols = ["image_id", "bytes", "caption", "phash"]
+    nulls = spark.createDataFrame(
+        [
+            ("null-1", None, "a red bicycle leaning on a wall", None),
+            ("null-2", None, "two dogs running across the beach", None),
+            ("null-3", None, "snow on the mountain pass at dawn", None),
+        ],
+        "image_id string, bytes binary, caption string, phash long",
+    )
+    df = spark.createDataFrame(images.images_pdf(32)).select(*cols).unionByName(nulls)
+    for collapse in (True, False):
+        out = pipeline.near_dup_pipeline(df, cfg=NearDupConfig(collapse_exact=collapse))
+        got = {r.image_id: r.cluster_id for r in out["clusters"].collect()}
+        for i in ("null-1", "null-2", "null-3"):
+            assert got[i] == i, f"collapse={collapse}: {i} clustered into {got[i]}"
+
+
+def test_components_sees_verified_edges_only(spark, monkeypatch):
+    """Stage 5 clusters over the exact-class quotient graph: a viral
+    exact group adds no edges to the graph components runs on. With a
+    50-copy group the graph holds no more edges than there are verified
+    pairs, and exactly as many as with a 5-copy group."""
+    from pyspark.sql import functions as F
+
+    from yadf_spark.operators import components
+
+    cols = ["image_id", "bytes", "caption", "phash"]
+    base = spark.createDataFrame(images.images_pdf(64)).select(*cols).cache()
+    viral = base.filter(F.col("image_id") == "img-000000002")
+    seen: list[int] = []
+    real_cc = components.connected_components
+
+    def recording(edges, *args, **kwargs):
+        seen.append(edges.count())
+        return real_cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(components, "connected_components", recording)
+    copy_ids = F.format_string("viral-%03d", F.col("id")).alias("image_id")
+    graph_edges = {}
+    for copies in (5, 50):
+        df = base.unionByName(
+            viral.crossJoin(spark.range(copies)).select(copy_ids, *cols[1:])
+        )
+        seen.clear()
+        out = pipeline.near_dup_pipeline(df)
+        n_verified = out["verified_pairs"].filter(F.col("verified")).count()
+        assert len(seen) == 1 and seen[0] <= n_verified
+        graph_edges[copies] = seen[0]
+        got = {r.image_id: r.cluster_id for r in out["clusters"].collect()}
+        assert {got[f"viral-{i:03d}"] for i in range(copies)} == {got["img-000000002"]}
+    base.unpersist()
+    assert graph_edges[5] == graph_edges[50]
+
+
 def test_collapse_exact_preserves_clusters(spark):
     """collapse_exact=True must produce IDENTICAL clusters to the
     uncollapsed pipeline on the planted corpus: members of a
     (byte-group, caption) class rejoin their representative through the
-    ladder's exact star edges, and every candidate/verify signal is a
-    pure function of (bytes, caption), identical across the class."""
+    ladder's exact clusters, which stage 5 starts from, and every
+    candidate/verify signal is a pure function of (bytes, caption),
+    identical across the class."""
     from yadf_spark.config import NearDupConfig
 
     df = spark.createDataFrame(images.images_pdf(256)).cache()

@@ -77,15 +77,18 @@ def test_ladder_counts_use_partial_aggregates_not_windows(spark):
 
 
 def test_exact_edges_use_partial_aggregates_not_windows(spark):
-    """Star-edge generation must not route a viral dup group through a
-    single window task either (same rule as the ladder counts)."""
+    """Star-edge generation and the exact-cluster assignment stage 5
+    starts from must not route a viral dup group through a single
+    window task either (same rule as the ladder counts)."""
     from yadf_spark.operators import pipeline as pl
 
     rows = [(f"id{i}", bytes([i % 7]) * (50 + i % 3)) for i in range(64)]
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
-    plan = _formatted(pl.exact_edges(exact.exact_assignments(df)))
-    assert "Window" not in plan
-    assert "partial_min" in plan
+    assignments = exact.exact_assignments(df)
+    for frame in (pl.exact_edges(assignments), pl.exact_clusters(assignments)):
+        plan = _formatted(frame)
+        assert "Window" not in plan
+        assert "partial_min" in plan
 
 
 def test_containment_probe_is_partial_agg_no_window(spark):

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yadf_spark.operators import components, simhash
+from yadf_spark.operators import components, exact, simhash
 
 
 def test_simhash_identical_and_locality(spark):
@@ -206,6 +206,63 @@ def test_merge_assignments_planted_semantics(spark):
     }
     want = {(1, 1), (2, 1), (3, 1), (10, 1), (11, 1), (99, 1), (50, 50), (51, 50)}
     assert got == want
+
+
+def test_exact_clusters_merge_equals_cc_over_exact_star_edges(spark):
+    """The pipeline's stage 5 clusters over the exact-class quotient
+    graph — merge_assignments(exact_clusters, verified) — and must equal
+    connected_components(verified UNION exact_edges) on both the driver
+    and the distributed path. Random exact groups (singletons
+    included) meet random verified edges that touch group members other
+    than the group min, ids outside every group, and each other."""
+    import numpy as np
+
+    from yadf_spark.operators import pipeline
+
+    def cc_pairs(df):
+        return {(r.id, r.cluster_id) for r in df.collect()}
+
+    def check(assignments, verified):
+        want = cc_pairs(
+            components.connected_components(
+                verified.unionByName(pipeline.exact_edges(assignments))
+            )
+        )
+        clusters = pipeline.exact_clusters(assignments)
+        for threshold in (100_000, 0):
+            got = cc_pairs(
+                components.merge_assignments(clusters, verified, driver_threshold=threshold)
+            )
+            assert got == want, f"driver_threshold={threshold}: {got ^ want}"
+
+    rng = np.random.default_rng(29)
+    for _ in range(3):
+        ids = [f"n{i:03d}" for i in range(60)]
+        keys = rng.integers(0, 30, len(ids))
+        assignments = spark.createDataFrame(
+            [(i, f"g{k}") for i, k in zip(ids, keys)], "id string, group_key string"
+        )
+        pool = ids + [f"x{i}" for i in range(5)]
+        edges = {tuple(sorted(rng.choice(pool, 2, replace=False).tolist())) for _ in range(20)}
+        check(assignments, spark.createDataFrame(sorted(edges), "id_a string, id_b string"))
+
+    # through the real ladder: a2 shares a1's bytes but not its caption,
+    # so a2 represents its own collapse class without being its exact
+    # group's min id; the verified edge reaches the group only via a2
+    images = spark.createDataFrame(
+        [
+            ("a1", bytearray(b"shared-bytes"), "first caption"),
+            ("a2", bytearray(b"shared-bytes"), "second caption"),
+            ("a3", bytearray(b"shared-bytes"), "second caption"),
+            ("b1", bytearray(b"other-bytes!"), "second caption"),
+            ("c1", bytearray(b"lone"), "third caption"),
+        ],
+        "image_id string, bytes binary, caption string",
+    )
+    assignments = exact.exact_assignments(images)
+    reps = {r.image_id for r in pipeline.collapse_to_representatives(images, assignments).collect()}
+    assert reps == {"a1", "a2", "b1", "c1"}
+    check(assignments, spark.createDataFrame([("a2", "b1")], "id_a string, id_b string"))
 
 
 def test_verify_pairs_null_payloads_never_verify(spark):

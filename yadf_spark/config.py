@@ -134,7 +134,8 @@ class NearDupConfig:
     flip_invariant: bool = False
     #: band/verify only one representative per (exact byte-group,
     #: caption, phash) equivalence class — members rejoin through the
-    #: ladder's exact star edges, so the cluster output is identical
+    #: ladder's exact clusters, which stage 5 starts from, so the
+    #: cluster output is identical
     #: (pipeline.collapse_to_representatives; the one exception is an
     #: over-cap viral bucket, which is dropped uncollapsed but SURVIVES
     #: collapsed — collapse only ever adds verified links) while a

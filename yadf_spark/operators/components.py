@@ -177,6 +177,8 @@ def merge_assignments(
     new_edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
+    max_iterations: int = 25,
+    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Fold a NEW batch's duplicate edges into yesterday's ``(id,
     cluster_id)`` assignment WITHOUT re-running components over the
@@ -213,7 +215,9 @@ def merge_assignments(
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    red = connected_components(reduced)
+    red = connected_components(
+        reduced, max_iterations=max_iterations, driver_threshold=driver_threshold
+    )
     relab = red.select(
         F.col("id").alias("_node"), F.col("cluster_id").alias("_label")
     ).localCheckpoint(eager=False)  # two consumers: relabel join + new-node anti-join

@@ -93,10 +93,18 @@ def exact_assignments(
     src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
 
     size = F.coalesce(F.length("payload"), F.lit(0)).cast("long")
+    # A null payload (fetch failed) is never byte-identical to anything
+    # (G7, the rule verify and the gate apply too), so it gets a
+    # per-row prefix key and resolves as a singleton. Hashing it would
+    # give every null row the same key: xxhash64 skips NULL inputs, so
+    # the prefix hash of (0, NULL) is the hash of the size alone.
+    p_hash = F.when(
+        F.col("payload").isNull(), F.concat(F.lit("null:"), F.col("id").cast("string"))
+    ).otherwise(hashes.prefix_hash(F.col("payload"), size, cfg.prefix_len, cfg.algo))
     narrow = src.select(
         "id",
         size.alias("size"),
-        hashes.prefix_hash(F.col("payload"), size, cfg.prefix_len, cfg.algo).alias("p_hash"),
+        p_hash.alias("p_hash"),
         F.when(
             size >= cfg.suffix_threshold,
             hashes.suffix_hash(F.col("payload"), cfg.suffix_len, cfg.algo),

@@ -2,7 +2,7 @@
 table — the full generalization of the reference's two-phase design
 (north_rule):
 
-    stage 1  exact ladder        exact byte duplicates -> edges
+    stage 1  exact ladder        exact byte-duplicate groups
              (size -> prefix -> suffix -> full hash; reference
               src/fs.rs:42-262, re-expressed in exact.py)
     stage 2  phash Hamming bands candidate pairs of visually-near images
@@ -12,7 +12,9 @@ table — the full generalization of the reference's two-phase design
     stage 4  verification        caption equality + decoded-pixel PSNR
              (the trusted "full hash" of the near-dup world)
     stage 5  connected components -> cluster assignment table
-             (alternating star contraction, checkpointed lineage)
+             over the exact-class quotient graph: each exact group
+             enters as a ready-made cluster (group min id) and only
+             the verified edges merge them (components.merge_assignments)
 
 Candidate generation is a union of recall-oriented sources; precision
 comes entirely from stage 4. Only ids + small evidence columns shuffle;
@@ -83,6 +85,27 @@ def exact_edges(assignments: DataFrame) -> DataFrame:
     )
 
 
+def exact_clusters(assignments: DataFrame) -> DataFrame:
+    """Exact-dup groups -> assignment ``(id, cluster_id = group min id)``
+    for the members of every group with two or more distinct ids —
+    exactly ``components.connected_components(exact_edges(assignments))``
+    (a star is its own component, labelled by its centre, the min), but
+    with no edge list and no clustering pass. Same skew rule as
+    :func:`exact_edges`: partial ``min``/``max`` aggregates joined back
+    null-safe, never a window. A group qualifies when ``min != max``
+    rather than when it counts two rows: a group whose rows all repeat
+    one id has no star edge, so it gets no cluster either."""
+    groups = (
+        assignments.groupBy("group_key")
+        .agg(F.min("id").alias("cluster_id"), F.max("id").alias("_max"))
+        .filter(F.col("cluster_id") != F.col("_max"))
+        .select(F.col("group_key").alias("_gk"), "cluster_id")
+    )
+    return assignments.join(
+        groups, assignments["group_key"].eqNullSafe(F.col("_gk"))
+    ).select("id", "cluster_id")
+
+
 def collapse_to_representatives(
     images: DataFrame,
     assignments: DataFrame,
@@ -103,10 +126,10 @@ def collapse_to_representatives(
     collapses exactly the same classes), so every candidate/verify
     signal (band membership, caption equality, byte equality, PSNR) is
     identical for any member vs the class representative; and every
-    member is connected to its representative through the ladder's
-    exact star edges, which the pipeline unions into the component
-    edges regardless. Replacing member edges with representative edges
-    therefore yields the same connected components — except where the
+    member shares its representative's exact cluster, which stage 5
+    starts from (``exact_clusters``) before it merges verified edges.
+    Replacing member edges with representative edges therefore yields
+    the same connected components — except where the
     LSH ``max_bucket`` cap binds: an over-cap viral bucket is DROPPED
     uncollapsed (the documented recall trade) but stays under the cap
     collapsed, so collapse can only ADD verified links, never lose one.
@@ -355,7 +378,6 @@ def near_dup_pipeline(
     assignments = ck.stage(
         "exact_ladder", {"cfg": "ladder-default"}, lambda: exact.exact_assignments(images)
     )
-    e_exact = exact_edges(assignments)
 
     # band/verify only (byte-group, caption)-class representatives:
     # cluster output is provably unchanged (collapse_to_representatives
@@ -396,14 +418,26 @@ def near_dup_pipeline(
     )
     # no .distinct() here: connected_components canonicalizes + dedups
     # its input anyway, so an extra exchange would be pure overhead
-    dup_edges = verified.filter(F.col("verified")).select("id_a", "id_b").unionByName(e_exact)
+    verified_edges = verified.filter(F.col("verified")).select("id_a", "id_b")
 
     if base_assignment is None:
+        # Cluster over the exact-class quotient graph: the ladder has
+        # already settled every exact group, so each one enters as a
+        # ready-made cluster and only the verified edges are clustered.
+        # merge_assignments(cc(E1), E2) == cc(E1 UNION E2) and
+        # exact_clusters == cc(exact_edges), so the output equals
+        # components over verified + exact star edges, while the graph
+        # holds at most one edge per verified pair instead of one more
+        # per exact copy: the exact-dup rate no longer pushes it off the
+        # driver union-find path. The merge reads the exact assignment
+        # four times; one eager checkpoint computes it once.
         assignment = ck.stage(
             "connected_components",
             {"max_iter": cfg.max_cc_iterations},
-            lambda: components.connected_components(
-                dup_edges, max_iterations=cfg.max_cc_iterations
+            lambda: components.merge_assignments(
+                exact_clusters(assignments).localCheckpoint(eager=True),
+                verified_edges,
+                max_iterations=cfg.max_cc_iterations,
             ),
         )
         clusters = components.clusters_with_singletons(images, assignment)
@@ -411,7 +445,9 @@ def near_dup_pipeline(
         assignment = ck.stage(
             "merge_assignments",
             {"max_iter": cfg.max_cc_iterations, "base": base_fingerprint},
-            lambda: components.merge_assignments(base_assignment, dup_edges),
+            lambda: components.merge_assignments(
+                base_assignment, verified_edges.unionByName(exact_edges(assignments))
+            ),
         )
         today = components.clusters_with_singletons(images, assignment)
         # rows only the base knows about (not re-observed today) carry
