@@ -5253,7 +5253,9 @@ def oracle_sql() -> dict[str, str]:
                          END, 6) AS ari,
                    round(CASE WHEN (CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE))
                                    * (CAST(tp2 AS DOUBLE) + CAST(fn2 AS DOUBLE)) = 0
-                         THEN 1.0
+                         THEN CASE WHEN CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE)
+                                        + CAST(fn2 AS DOUBLE) = 0
+                                   THEN 1.0 ELSE 0.0 END
                          ELSE CAST(tp2 AS DOUBLE)
                               / sqrt((CAST(tp2 AS DOUBLE) + CAST(fp2 AS DOUBLE))
                                      * (CAST(tp2 AS DOUBLE) + CAST(fn2 AS DOUBLE)))

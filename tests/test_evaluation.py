@@ -87,6 +87,28 @@ def test_cluster_quality_perfect_and_degenerate(spark):
     }
 
 
+def test_fowlkes_mallows_is_zero_when_only_one_labeling_has_pairs(spark):
+    """FM's denominator (tp+fp)(tp+fn) is zero when either labeling has no
+    pairs. Only when NEITHER has pairs do they agree (1.0); a merged pair
+    against singleton truth, or the reverse, is total disagreement."""
+    together = spark.createDataFrame(
+        [("a", "x"), ("b", "x")], "id string, cluster_id string"
+    )
+    apart = spark.createDataFrame(
+        [("a", "s1"), ("b", "s2")], "id string, cluster_id string"
+    )
+    as_truth = lambda df: df.withColumnRenamed("cluster_id", "true_cluster")  # noqa: E731
+    # prediction merges a pair the truth keeps apart: tp 0, fp 1
+    got = _one(evaluation.cluster_quality(together, as_truth(apart)))
+    assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (0, 1, 0, 0)
+    assert got["rand_index"] == 0.0 and got["ari"] == 0.0
+    assert got["fowlkes_mallows"] == 0.0
+    # prediction splits a pair the truth groups: tp 0, fn 1
+    got = _one(evaluation.cluster_quality(apart, as_truth(together)))
+    assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (0, 0, 1, 0)
+    assert got["fowlkes_mallows"] == 0.0
+
+
 def test_cluster_quality_excludes_null_labels(spark):
     """NULL on either side means 'unassigned', not a cluster — the
     gates' isNotNull discipline. Without the filter, two NULL-assigned

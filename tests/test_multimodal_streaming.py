@@ -374,6 +374,87 @@ def test_streaming_near_dup_replayed_batch_is_idempotent(spark, tmp_path):
     all_imgs.unpersist()
 
 
+def _bucket_band_fn(df):
+    """Band fn for hand-built rows ``(id, bucket)``: one band, one bucket
+    per distinct ``bucket`` value."""
+    return df.select("id", F.lit(0).alias("band_idx"), F.col("bucket").alias("band_hash"))
+
+
+def _ids_frame(spark, ids, bucket=1):
+    return spark.createDataFrame([(i, bucket) for i in ids], "id string, bucket long")
+
+
+def _batch_pairs(spark, pairs_dir, batch_id):
+    rows = spark.read.parquet(f"{pairs_dir}/batch_id={batch_id}").collect()
+    return {(r.id_a, r.id_b) for r in rows}
+
+
+def test_replayed_batch_does_not_read_its_own_index_rows(spark, tmp_path):
+    """A replay finds its own rows in batch_id=<k> from the lost attempt.
+    They are not history: counted as history they push a bucket of 3
+    history rows past max_bucket=4, and the replay loses the 6 history
+    pairs the first attempt emitted."""
+    from yadf_spark.config import LshConfig
+
+    cfg = NearDupConfig(lsh=LshConfig(max_bucket=4))
+    index_dir, pairs_dir = str(tmp_path / "index"), str(tmp_path / "pairs")
+    history = _ids_frame(spark, ["h1", "h2", "h3"])
+    batch = _ids_frame(spark, ["n1", "n2"])
+    sd.incremental_near_dup_batch(history, 0, index_dir, pairs_dir, cfg, _bucket_band_fn)
+    sd.incremental_near_dup_batch(batch, 1, index_dir, pairs_dir, cfg, _bucket_band_fn)
+    first = _batch_pairs(spark, pairs_dir, 1)
+    assert len(first) == 7  # 2 x 3 history pairs + (n1, n2)
+    sd.incremental_near_dup_batch(batch, 1, index_dir, pairs_dir, cfg, _bucket_band_fn)
+    assert _batch_pairs(spark, pairs_dir, 1) == first
+    assert spark.read.parquet(index_dir).count() == 5
+
+
+def test_history_buckets_above_max_bucket_are_dropped_and_logged(spark, tmp_path, caplog):
+    """History buckets of 5 and 6 rows exceed max_bucket=4 and give no
+    pairs; the warning counts buckets, not rows; a bucket of exactly 4
+    history rows is kept."""
+    from yadf_spark.config import LshConfig
+
+    cfg = NearDupConfig(lsh=LshConfig(max_bucket=4))
+    index_dir, pairs_dir = str(tmp_path / "index"), str(tmp_path / "pairs")
+    history = (
+        _ids_frame(spark, [f"a{i}" for i in range(5)], bucket=1)
+        .unionByName(_ids_frame(spark, [f"b{i}" for i in range(6)], bucket=2))
+        .unionByName(_ids_frame(spark, [f"c{i}" for i in range(4)], bucket=3))
+    )
+    batch = spark.createDataFrame(
+        [("na", 1), ("nb", 2), ("nc", 3)], "id string, bucket long"
+    )
+    sd.incremental_near_dup_batch(history, 0, index_dir, pairs_dir, cfg, _bucket_band_fn)
+    with caplog.at_level("WARNING", logger=sd.__name__):
+        sd.incremental_near_dup_batch(batch, 1, index_dir, pairs_dir, cfg, _bucket_band_fn)
+    assert _batch_pairs(spark, pairs_dir, 1) == {(f"c{i}", "nc") for i in range(4)}
+    assert "dropped 2 history buckets larger than 4 rows" in caplog.text
+
+
+def test_ingest_micro_batch_job_count(spark, tmp_path):
+    """Spark jobs of one micro-batch against an existing index: each job
+    is a scheduling round trip, the fixed cost of a small batch.
+    Computing the band table once and reading the index once took this
+    fixture from 20 jobs to 15; the bound holds it there."""
+    imgs = images_df(spark, 48, seed=5)
+    src = str(tmp_path / "src")
+    imgs.filter(F.col("image_id") < "img-000000024").write.parquet(src + "/b0")
+    imgs.filter(F.col("image_id") >= "img-000000024").write.parquet(src + "/b1")
+    index_dir, pairs_dir = str(tmp_path / "index"), str(tmp_path / "pairs")
+    sd.incremental_near_dup_batch(spark.read.parquet(src + "/b0"), 0, index_dir, pairs_dir)
+    sc = spark.sparkContext
+    group = "ingest-micro-batch-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        sd.incremental_near_dup_batch(spark.read.parquet(src + "/b1"), 1, index_dir, pairs_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 15, n_jobs
+
+
 def test_streaming_audio_near_dup_matches_batch_candidates(spark, tmp_path):
     """The SAME incremental band index, fed audio fingerprint bands via
     band_fn, must produce the batch path's candidate set regardless of
@@ -493,7 +574,7 @@ def test_streaming_near_dup_end_to_end(spark, tmp_path):
     idx = spark.read.parquet(str(tmp_path / "idx"))
     assert idx.count() > 0
     # batch_id is the replay-idempotency partition key (one subdir per
-    # batch, overwritten on replay); band_idx prunes the band join
+    # batch, overwritten on replay); band_idx partitions each subdir
     assert set(idx.columns) == {"id", "band_idx", "band_hash", "batch_id"}
 
 

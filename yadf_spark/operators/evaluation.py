@@ -66,10 +66,12 @@ def cluster_quality(
       ``fowlkes_mallows`` = tp/√((tp+fp)(tp+fn)) (the geometric mean
       of pair precision and pair recall, Fowlkes & Mallows 1983) — all
       computed from the doubled counts (the ratios are
-      scale-invariant), with degenerate zero denominators reported as
-      1.0 (both labelings trivially agree — the module's convention,
-      matching RI/ARI on all-singleton inputs; sklearn reports FM 0.0
-      there).
+      scale-invariant). Zero RI/ARI denominators are reported as 1.0
+      (both labelings trivially agree — the module's convention). FM's
+      denominator is zero whenever one labeling has no pairs: FM is 1.0
+      when neither has any (sklearn reports 0.0 there) and 0.0 when
+      only one has (tp = 0 with fp > 0 or fn > 0: total disagreement
+      on the pairs).
 
     Scale shape: one (cluster, truth) cell aggregation over the joined
     frame (narrow rows, O(cells) state), then per-side marginals read
@@ -112,9 +114,12 @@ def cluster_quality(
         (tp_d + tn_d) / total2.cast("double")
     )
     fm_denom = (tp_d + fp_d) * (tp_d + fn_d)
-    fm = F.when(fm_denom == F.lit(0.0), F.lit(1.0)).otherwise(
-        tp_d / F.sqrt(fm_denom)
-    )
+    # a zero denominator means one labeling has no pairs: they agree
+    # trivially only when the other has none either
+    fm = F.when(
+        fm_denom == F.lit(0.0),
+        F.when(tp_d + fp_d + fn_d == F.lit(0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
+    ).otherwise(tp_d / F.sqrt(fm_denom))
     # counts stay decimal(38,0): tn ~ n²/2 exceeds long (and would
     # CAST_OVERFLOW under ANSI mode) above ~4.3e9 evaluated items; the
     # doubled values are even, so the /2 floor is exact

@@ -13,9 +13,13 @@ against everything already ingested. Two surfaces:
   a ``foreachBatch`` loop that keeps a compact persistent *band index*
   (id, band_idx, band_hash — the same bucket table the batch pipeline
   self-joins, operators/pipeline.py) and joins each micro-batch's bands
-  against it. Per batch of size b against history of size N the join
-  touches O(b) index partitions, not O(N) — the index is written
-  partitioned by band hash so the band join prunes partitions.
+  against it. The index is one ``batch_id=`` subdir per micro-batch,
+  each partitioned by ``band_idx``, so every batch reads every band
+  partition; what keeps the history side of the join O(b) rows for a
+  batch of b rows against history N is a broadcast semi-join on the
+  batch's ``(band_idx, band_hash)`` keys, which drops untouched buckets
+  at the scan. Each micro-batch computes its bands once and reads the
+  index once.
 
 Exactly-once posture: ``foreachBatch`` output uses batch-id-suffixed
 directories + the checkpointed batch offset, so a replayed batch
@@ -78,8 +82,8 @@ def incremental_near_dup_batch(
     band_fn=None,
 ) -> None:
     """One ``foreachBatch`` tick: join the new batch's bands against the
-    persistent index, verify candidates, emit pairs, write the batch's
-    bands into its own ``batch_id=`` index subdir.
+    persistent index, emit candidate pairs, write the batch's bands into
+    its own ``batch_id=`` index subdir.
 
     ``band_fn`` maps the batch to its ``(id, band_idx, band_hash)``
     bucket-membership table; the default is the image pipeline's
@@ -87,57 +91,59 @@ def incremental_near_dup_batch(
     whole incremental index unchanged — e.g.
     ``operators.audio.audio_band_table`` for audio clips.
 
+    Each tick computes the batch's band table once and reads the history
+    index once (``_touched_history``); the history-join pairs, the
+    within-batch pairs and the index write all read those two frames.
+
     Replay safety: if the previous attempt wrote the index but lost the
-    checkpoint commit, the replayed batch (a) sees its own ids in the
-    history join — the ``id_a != id_b`` filter plus the final
-    ``distinct`` make the pair output identical — and (b) OVERWRITES its
-    ``batch_id=`` subdir rather than appending duplicate index rows."""
+    checkpoint commit, the replayed batch (a) reads history as every
+    ``batch_id=`` subdir except its own — the rows it finds under its
+    own id are the ones it is about to overwrite, not history, and
+    counting them would push history buckets over ``max_bucket`` and
+    drop real pairs — and (b) OVERWRITES its ``batch_id=`` subdir rather
+    than appending duplicate index rows. The pair output of a replay is
+    therefore identical to the first attempt's."""
     cfg = cfg or NearDupConfig()
     spark = batch.sparkSession
-    batch = batch.persist()
     tag = _band_fn_tag(band_fn)
-    new_bands = (band_fn(batch) if band_fn else _band_table(batch, cfg)).persist()
+    # the batch's bands, computed once: the history join, the within-batch
+    # expansion and the index write all read them. Eager localCheckpoint,
+    # not persist(): AQE starts the pairs write's independent branches
+    # concurrently, and each would recompute the bands before a cache
+    # filled; checkpoint blocks are freed by the context cleaner.
+    new_bands = (
+        (band_fn(batch) if band_fn else _band_table(batch, cfg))
+        .select("id", "band_idx", "band_hash")
+        .localCheckpoint(eager=True)
+    )
 
     pair_frames = []
     if _index_exists(spark, index_dir):
         _reject_legacy_layout(spark, index_dir)
         _check_band_fn_tag(spark, index_dir, tag)
-        index = spark.read.parquet(index_dir)
-        old = index.select(
-            F.col("id").alias("id_old"), "band_idx", "band_hash"
-        )
-        new = new_bands.select(F.col("id").alias("id_new"), "band_idx", "band_hash")
-        # band equi-join: new rows vs history, with the batch path's
-        # guards. The micro-batch's distinct band keys broadcast to
-        # prune the index down to touched buckets, and history buckets
-        # above the cap are dropped with a log line (the same recall
-        # trade as candidate_pairs_from_buckets — a viral bucket in the
-        # accumulated index would otherwise fan each new member out
-        # unboundedly); residual per-key skew is bounded by the cap and
-        # split by AQE's skew join.
-        new_keys = new.select("band_idx", "band_hash").distinct()
-        touched = old.join(F.broadcast(new_keys), ["band_idx", "band_hash"], "left_semi")
-        sizes = touched.groupBy("band_idx", "band_hash").agg(F.count("*").alias("_hn"))
         max_bucket = cfg.lsh.max_bucket
-        n_dropped = sizes.filter(F.col("_hn") > max_bucket).count()
+        history = _touched_history(spark, index_dir, batch_id, new_bands, max_bucket)
+        n_dropped = history.filter(F.col("_hn") > max_bucket).count()
         if n_dropped:
             _log(
                 f"incremental-near-dup: dropped {n_dropped} history buckets "
                 f"larger than {max_bucket} rows"
             )
-        ok_keys = sizes.filter(F.col("_hn") <= max_bucket).select("band_idx", "band_hash")
-        pruned = touched.join(F.broadcast(ok_keys), ["band_idx", "band_hash"], "left_semi")
+        new = new_bands.select(F.col("id").alias("id_new"), "band_idx", "band_hash")
         nv_old = (
-            new.join(pruned, ["band_idx", "band_hash"])
+            new.join(
+                history.filter(F.col("_hn") <= max_bucket).drop("_hn"),
+                ["band_idx", "band_hash"],
+            )
             .select(
                 F.least("id_new", "id_old").alias("id_a"),
                 F.greatest("id_new", "id_old").alias("id_b"),
             )
-            # a replayed batch's own ids may already be in the index
-            # (batch written, checkpoint commit lost) — least/greatest of
-            # equal ids would emit a self-pair
+            # an id re-sent under an earlier batch_id is in both sides;
+            # least/greatest of equal ids would emit a self-pair. Per-key
+            # skew in this join is bounded by the cap and split by AQE's
+            # skew join.
             .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
         )
         pair_frames.append(nv_old)
 
@@ -164,14 +170,55 @@ def incremental_near_dup_batch(
     # subdir, like the pairs sink) so a batch replayed after a failure
     # between index write and checkpoint commit REPLACES its own rows
     # instead of appending duplicates — true idempotent replay. The
-    # subdir name doubles as a partition column on read; band_idx
-    # partitioning within each batch dir keeps the band-join pruning.
-    new_bands.select("id", "band_idx", "band_hash").write.mode("overwrite").partitionBy(
-        "band_idx"
-    ).parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
+    # subdir name doubles as a partition column on read, which lets the
+    # history read skip the batch's own subdir.
+    new_bands.write.mode("overwrite").partitionBy("band_idx").parquet(
+        os.path.join(index_dir, f"batch_id={batch_id}")
+    )
     _write_band_fn_tag(spark, index_dir, tag)
-    new_bands.unpersist()
-    batch.unpersist()
+
+
+def _touched_history(
+    spark, index_dir: str, batch_id: int, new_bands: DataFrame, max_bucket: int
+) -> DataFrame:
+    """The history side of the band join, read from the index once and
+    materialized: ``(band_idx, band_hash, id_old, _hn)`` for every history
+    row in a bucket the batch touches that holds ``_hn <= max_bucket``
+    history rows, plus one row (``id_old`` NULL) per touched bucket above
+    the cap.
+
+    History is every ``batch_id=`` subdir but this batch's own (see the
+    replay note in ``incremental_near_dup_batch``); the batch_id filter
+    prunes that subdir from the scan. The batch's band keys broadcast to
+    a semi-join that prunes the index down to touched buckets. Bucket
+    sizes come from a partial-aggregated ``groupBy().count()`` joined
+    back to the rows — never a window, which would gather a viral bucket
+    on one task (the skew rule of ``operators/exact.py``). Buckets above
+    the cap are dropped — the same recall trade as
+    ``candidate_pairs_from_buckets``: a viral bucket in the accumulated
+    index would otherwise fan each new member out unboundedly — and
+    their marker rows let the caller log how many were dropped without
+    reading the index again."""
+    old = (
+        spark.read.parquet(index_dir)
+        .filter(F.col("batch_id") != F.lit(batch_id))
+        .select(F.col("id").alias("id_old"), "band_idx", "band_hash")
+    )
+    # no distinct(): repeated keys cannot change a semi-join's output, and
+    # a distinct would cost a shuffle round (one more Spark job) per batch
+    keys = new_bands.select("band_idx", "band_hash")
+    touched = old.join(F.broadcast(keys), ["band_idx", "band_hash"], "left_semi")
+    sizes = touched.groupBy("band_idx", "band_hash").agg(F.count("*").alias("_hn"))
+    kept = touched.join(sizes.filter(F.col("_hn") <= max_bucket), ["band_idx", "band_hash"])
+    dropped = sizes.filter(F.col("_hn") > max_bucket).select(
+        "band_idx",
+        "band_hash",
+        F.lit(None).cast(old.schema["id_old"].dataType).alias("id_old"),
+        "_hn",
+    )
+    # lazy: the caller's dropped-bucket count is the first action and
+    # materializes it, one job fewer than an eager checkpoint plus a count
+    return kept.unionByName(dropped).localCheckpoint(eager=False)
 
 
 def compact_band_index(spark, index_dir: str, out_dir: str) -> None:
@@ -184,7 +231,8 @@ def compact_band_index(spark, index_dir: str, out_dir: str) -> None:
     ``batch_id=0`` layer partitioned by ``band_idx``, ``distinct``-ed so
     any residue collapses. Write goes to a NEW directory — object stores
     have no atomic rename, so the caller switches ``index_dir`` to
-    ``out_dir`` (and may resume appending batch subdirs beside it)."""
+    ``out_dir`` (and may resume appending batch subdirs beside it, with
+    batch ids above 0: a batch 0 would overwrite the compacted layer)."""
     idx = spark.read.parquet(index_dir).select("id", "band_idx", "band_hash").distinct()
     idx.write.mode("overwrite").partitionBy("band_idx").parquet(
         os.path.join(out_dir, "batch_id=0")
