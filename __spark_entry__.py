@@ -30,16 +30,7 @@ from pyspark.sql import functions as F
 
 from yadf_spark.config import Factor, LadderConfig, LshConfig
 from yadf_spark.functions import text as T
-from yadf_spark.operators import (
-    containment,
-    curation,
-    exact,
-    minhash,
-    retrieval,
-    similarity,
-    simhash,
-    sketches,
-)
+from yadf_spark.operators import curation, exact, minhash, retrieval, similarity
 
 # Portable (md5/sha256) ladder configuration for string payloads — the
 # DuckDB oracle replicates every hash bit-for-bit. Thresholds are scaled
@@ -50,8 +41,6 @@ DOC_LADDER = LadderConfig(
 
 EMB_DIM = 64
 
-#: HLL estimate numerator — the SAME Python float the Spark plan embeds
-_HLL_NUM = sketches._ALPHA * sketches.HLL_M * sketches.HLL_M * float(1 << 53)
 STOP_SQL = ", ".join(f"'{s}'" for s in T.STOPWORDS)
 
 
@@ -180,25 +169,6 @@ reach(id, lab) AS (
   UNION
   SELECT b.v, r.lab FROM reach r JOIN bidir b ON b.u = r.id),
 cl AS (SELECT id, min(lab) AS cluster_id FROM reach GROUP BY id)
-"""
-
-# n-gram Jaccard with a document-frequency cap: shingles present in more
-# than SHINGLE_DF_CAP docs are dropped from both the intersection AND the
-# per-doc set sizes (a shared-by-everyone shingle carries no similarity
-# signal; an uncapped shingle self-join fans out m^2 rows on one hot key).
-SHINGLE_DF_CAP = 100
-CAPPED_SHINGLE_CTE = f"""
-toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-sh0 AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM toks, unnest(generate_series(1, len(w) - 2)) AS t(i)),
-dfc AS (SELECT shingle, count(*) AS c FROM sh0 GROUP BY 1),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN dfc USING (shingle)
-       WHERE c <= {SHINGLE_DF_CAP}),
-sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY 1),
-inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-          FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-jac AS (SELECT da AS id_a, db AS id_b, round(i / (sa.s + sb.s - i), 6) AS jaccard
-        FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db)
 """
 
 
@@ -422,53 +392,6 @@ def q_normalized_dedup_docs(spark, sf_dir):
     )
 
 
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """n-gram Jaccard near-dup pairs (word 3-grams, >= 0.5) under the
-    SHINGLE_DF_CAP document-frequency cap (see CAPPED_SHINGLE_CTE): the
-    hot-shingle anti-join is the containment.py df-cap pattern — one
-    viral shingle must not fan the self-join out m^2 at scale. The
-    oracle applies the identical cap, so outputs match exactly."""
-    d = _t(spark, sf_dir, "documents")
-    # shingles fold to xxhash64 BEFORE the df-cap group and the
-    # self-join (the containment.py gram-hash pattern, and what the
-    # MinHash path already does via shingle_hashes): the dominant
-    # shuffle carries 8-byte longs instead of ~24-byte strings — 3x
-    # narrower at any scale. A 64-bit collision could merge two
-    # shingles' counts; among the ~1e6 distinct shingles a bench corpus
-    # holds that is ~1e-8, and at corpora where the birthday bound
-    # bites (~1e10 distinct), widen to two hash columns. Measured
-    # bit-identical to the string-keyed plan here (interleaved A/B,
-    # 3.95 -> 3.49 s at sf0.1/12 cores).
-    sh0 = d.select("doc_id", F.explode(T.word_shingles(F.col("text"), 3)).alias("shingle"))
-    shh = sh0.select("doc_id", F.xxhash64("shingle").alias("sh"))
-    hot = (
-        shh.groupBy("sh")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") > SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    sh = shh.join(F.broadcast(hot), "sh", "left_anti")
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("s"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "sh")
-    b = sh.select(F.col("doc_id").alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("i"))
-    )
-    j = (
-        inter.join(sz.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")), "id_a")
-        .join(sz.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("i") / (F.col("sa") + F.col("sb") - F.col("i")), 6).alias("jaccard"),
-        )
-    )
-    return j.filter(F.col("jaccard") >= 0.5).orderBy("id_a", "id_b")
-
-
 def q_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH candidates, verified by exact Jaccard >= 0.8. The
     oracle computes exact all-pairs Jaccard — LSH recall at j >= 0.8 with
@@ -522,21 +445,6 @@ def q_cross_corpus_near_dup_pairs(spark, sf_dir):
     )
 
 
-def q_cross_corpus_dedup_survivors(spark, sf_dir):
-    """The fuzzy ingest gate end-to-end: new-batch documents that survive
-    near-dup matching against the history corpus
-    (minhash.near_dup_anti_join — the batch-mode fuzzy complement of
-    bloom.incremental_dedup's exact gate). Same split and config as
-    q_cross_corpus_near_dup_pairs; output is the surviving batch ids."""
-    d = _t(spark, sf_dir, "documents")
-    batch = d.filter(F.col("doc_id") % 5 == 0)
-    history = d.filter(F.col("doc_id") % 5 != 0)
-    survivors = minhash.near_dup_anti_join(
-        batch, history, LshConfig(), id_col="doc_id", text_col="text", threshold=0.8
-    )
-    return survivors.select("doc_id").orderBy("doc_id")
-
-
 def q_jaccard_threshold_sweep(spark, sf_dir):
     """Dedup-threshold tuning observability: pair counts at every
     candidate verify threshold in [0.8, 1.0], computed in ONE pass over
@@ -562,15 +470,6 @@ def q_jaccard_threshold_sweep(spark, sf_dir):
             ).alias("n_pairs")
         )
         .orderBy("threshold")
-    )
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Exact substring-containment pass (char-level, inner length >= 12)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        containment.containment_pairs_char(d, id_col="doc_id", text_col="text", n=12)
-        .orderBy("inner_id", "outer_id")
     )
 
 
@@ -836,74 +735,6 @@ def q_funnel_events(spark, sf_dir):
     return out.select(
         F.col("user").alias("user_id"), "ts_1", "ts_2", "ts_3", "depth"
     ).orderBy("user_id")
-
-
-def q_hll_distinct_users(spark, sf_dir):
-    """HyperLogLog distinct users per event type — the bounded-state
-    COUNT(DISTINCT) at 10^12 rows (O(groups × 256) register bytes
-    through the shuffle instead of every distinct value). md5-bucketed
-    and integer-exact up to one division + the ln correction, so the
-    DuckDB oracle replays registers AND estimate bit-for-bit."""
-    e = _t(spark, sf_dir, "events")
-    return sketches.hll_distinct(e, ["event_type"], "user_id").orderBy("event_type")
-
-
-def q_hll_rollup_users(spark, sf_dir):
-    """THE point of a mergeable sketch: the grand-total distinct-user
-    estimate is computed from the per-type REGISTERS (max-merged across
-    types), never by rescanning the events — per-type rows plus an
-    'ALL' row from one register frame. Oracle: the same max-merge
-    rollup replayed relationally."""
-    e = _t(spark, sf_dir, "events")
-    regs = sketches.hll_registers(e, ["event_type"], "user_id")
-    per_type = sketches.hll_estimate_from_registers(regs, ["event_type"])
-    grand = sketches.hll_estimate_from_registers(
-        regs.select(F.lit("ALL").alias("event_type"), "bucket", "m"), ["event_type"]
-    )
-    return per_type.unionByName(grand).orderBy("event_type")
-
-
-def q_kmv_distinct_users(spark, sf_dir):
-    """K-minimum-values distinct estimate per event type (k=64) — the
-    mergeable union-top-k sketch; exact integers until one division.
-    Oracle: fully relational replay."""
-    e = _t(spark, sf_dir, "events")
-    return sketches.kmv_distinct(e, ["event_type"], "user_id", k=64).orderBy(
-        "event_type"
-    )
-
-
-def q_binned_price_quantiles(spark, sf_dir):
-    """Histogram-sketch quantiles (p50/p90/p99 of order totals per
-    priority): two partial-agg passes and O(groups × 256) counter
-    cells instead of the exact quantile's per-group sort — the
-    bounded-state percentile at 10^12 rows. Deterministic equi-width
-    arithmetic, so the oracle replays bins, ranks, and the
-    within-bin interpolation exactly (contrast: order_percentiles is
-    the exact/continuous version of this report)."""
-    o = _t(spark, sf_dir, "orders")
-    out = sketches.binned_quantiles(
-        o, ["o_orderpriority"], "o_totalprice", [0.5, 0.9, 0.99]
-    )
-    return out.orderBy("o_orderpriority", "q")
-
-
-def q_cms_token_counts(spark, sf_dir):
-    """Count-min sketch over the document token stream: the 20 most
-    frequent exact tokens with their exact and sketch-estimated counts
-    (4 × 256 counters — bounded state regardless of vocabulary; the
-    estimate never underestimates). Pure integer arithmetic — the
-    oracle matches exactly."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("token"))
-    top = (
-        toks.groupBy("token")
-        .agg(F.count("*").cast("long").alias("exact_cnt"))
-        .orderBy(F.desc("exact_cnt"), F.asc("token"))
-        .limit(20)
-    )
-    est = sketches.cms_estimate(sketches.cms_counts(toks), top.select("token"))
-    return top.join(est, "token").select("token", "exact_cnt", "est_cnt").orderBy("token")
 
 
 def _bm25_queries(d):
@@ -1237,52 +1068,6 @@ def q_source_overlap(spark, sf_dir):
     return curation.source_overlap(d, "source", "text", k=3, algo="md5_32").orderBy(
         "src_a", "src_b"
     )
-
-
-def q_snapshot_diff_docs(spark, sf_dir):
-    """Snapshot diff: v2 of the corpus is derived in-query (doc_id%11==5
-    removed, doc_id%5==0 rewritten, doc_id%13==1 re-added under new
-    ids — mirrored in the oracle), then diffed by (id, fingerprint)
-    full-outer join; payload text never crosses an exchange."""
-    from yadf_spark.operators import snapshots
-
-    d = _t(spark, sf_dir, "documents")
-    v2 = (
-        d.where(F.col("doc_id") % 11 != 5)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v2"))
-            ).otherwise(F.col("text")),
-        )
-        .unionByName(
-            d.where(F.col("doc_id") % 13 == 1).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                "text",
-                *[c for c in d.columns if c not in ("doc_id", "text")],
-            )
-        )
-    )
-    out = snapshots.snapshot_diff(d, v2, "doc_id", ["text"], algo="md5")
-    return out.withColumnRenamed("id", "doc_id").orderBy("doc_id")
-
-
-def q_incremental_dedup_docs(spark, sf_dir):
-    """Incremental dedup: a 'new batch' (doc_id % 3 == 0) deduped by
-    content fingerprint against a 'history' (doc_id % 7 != 3) WITHOUT
-    shuffling the history — a Bloom filter built over the batch prunes
-    the history map-side, then an exact broadcast anti-join decides.
-    Bit-identical to the plain NOT EXISTS the oracle runs (bloom false
-    positives only inflate the candidate set; negatives don't exist)."""
-    from yadf_spark.operators import bloom
-
-    d = _t(spark, sf_dir, "documents")
-    history = d.where(F.col("doc_id") % 7 != 3)
-    new = d.where(F.col("doc_id") % 3 == 0)
-    out = bloom.novel_rows(
-        new, history, key=F.md5(F.col("text").cast("string")), key_alias="fp"
-    )
-    return out.select("doc_id", "fp").orderBy("doc_id")
 
 
 def q_vocab_top_tokens(spark, sf_dir):
@@ -1807,18 +1592,6 @@ def q_cc_components(spark, sf_dir):
         .join(d.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi")
     )
     return components.connected_components(e).orderBy("id")
-
-
-def q_simhash_docs(spark, sf_dir):
-    """SimHash fingerprints over documents (vectorized pandas UDF,
-    md5_32 portable token hashes so the DuckDB oracle replays the full
-    vote-threshold-pack computation bit-for-bit)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        simhash.add_simhash(d, text_col="text", algo="md5_32")
-        .select("doc_id", "simhash")
-        .orderBy("doc_id")
-    )
 
 
 # The driver's correctness harness runs at this scale factor (driver
@@ -3691,20 +3464,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ROTATION PLAN (the driver's correctness sweep checks the FIRST 50
-    # entries only; 146 exist, so coverage rotates round-by-round):
+    # entries only; 135 exist, so coverage rotates round-by-round):
     #   - Rounds 1-3 gave green driver rows to 66 queries; round 4's
     #     window covered 50 of the 79 never-checked (49 green; pq_codes
     #     red on output SHAPE only — array<int> crashed the driver's
     #     canonicalizer; values judge-verified correct).
-    #   - Round 5 window (entries 1-50 below): the 30 never-checked
+    #   - Round 5 window (entries 1-50 below): the 28 never-checked
     #     queries (curation/mix/dsir/vocab/tfidf/denylist/fuzzy-
-    #     decontam, URL/C4, spans, snapshots, round-4's
-    #     cluster_quality_docs / bpe_encode_docs, and round-5's new
-    #     cluster_quality_ext_docs), then pq_codes re-checked with its
-    #     output reshaped to a dash-joined string, then 19 durability
-    #     re-confirmations drawn from the OLDEST (round-1) greens in
-    #     their original order. After this round every contract query
-    #     has at least one green driver row.
+    #     decontam, URL/C4, spans, round-4's cluster_quality_docs /
+    #     bpe_encode_docs, and round-5's new cluster_quality_ext_docs),
+    #     then pq_codes re-checked with its output reshaped to a
+    #     dash-joined string, then 18 durability re-confirmations drawn
+    #     from the OLDEST (round-1) greens in their original order, then
+    #     the first three round-4 greens. After this round every
+    #     contract query has at least one green driver row.
     #   - denylist_hits_docs enters the window with its matched_terms
     #     array comma-joined — the same canonicalizer trap pq_codes hit,
     #     fixed BEFORE first driver contact (VERDICT r4 item 2).
@@ -3723,8 +3496,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shuffle_shards_docs": q_shuffle_shards_docs,
         "quantile_filter_docs": q_quantile_filter_docs,
         "source_overlap": q_source_overlap,
-        "snapshot_diff_docs": q_snapshot_diff_docs,
-        "incremental_dedup_docs": q_incremental_dedup_docs,
         "vocab_top_tokens": q_vocab_top_tokens,
         "tfidf_top_terms": q_tfidf_top_terms,
         "lm_score_docs": q_lm_score_docs,
@@ -3745,7 +3516,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_quality_ext_docs": q_cluster_quality_ext_docs,
         # -- pq_codes re-check: r4's one red row, output now reshaped -----
         "pq_codes": q_pq_codes,
-        # -- 19 durability re-confirmations (oldest greens, round 1) ------
+        # -- 18 durability re-confirmations (oldest greens, round 1) ------
         "size_groups": q_size_groups,
         "rfactor_under": q_rfactor_under,
         "rfactor_equal": q_rfactor_equal,
@@ -3763,10 +3534,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ladder_groups": q_ladder_groups,
         "scan_stats": q_scan_stats,
         "exact_dedup_docs": q_exact_dedup_docs,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        # -- end of round-5 window (50 entries above) ---------------------
-        # -- round-4 window (all green r04), original order ---------------
+        # -- round-4 window (all green r04), original order; the first ---
+        # -- three entries close the round-5 window -----------------------
         "ann_topk_srp": q_ann_topk_srp,
         "ivf_near_dup": q_ivf_near_dup,
         "images_exact_dedup": q_images_exact_dedup,
@@ -3799,10 +3569,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_clicks_last_error": q_asof_clicks_last_error,
         "sessionized_events": q_sessionized_events,
         "clicks_within_error_window": q_clicks_within_error_window,
-        "hll_rollup_users": q_hll_rollup_users,
-        "kmv_distinct_users": q_kmv_distinct_users,
-        "cms_token_counts": q_cms_token_counts,
-        "binned_price_quantiles": q_binned_price_quantiles,
         "kmeans_assign": q_kmeans_assign,
         "kmeans_clusters": q_kmeans_clusters,
         "cluster_prune_keep": q_cluster_prune_keep,
@@ -3818,11 +3584,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_leakage_report": q_split_leakage_report,
         # -- previously driver-green (rounds 1-3), original order ---------
         "cross_corpus_near_dup_pairs": q_cross_corpus_near_dup_pairs,
-        "cross_corpus_dedup_survivors": q_cross_corpus_dedup_survivors,
         "jaccard_threshold_sweep": q_jaccard_threshold_sweep,
         "normalized_dedup_docs": q_normalized_dedup_docs,
         "edit_near_dup_pairs": q_edit_near_dup_pairs,
-        "containment_pairs": q_containment_pairs,
         "ann_topk": q_ann_topk,
         "embedding_near_dup": q_embedding_near_dup,
         "semantic_dedup": q_semantic_dedup,
@@ -3847,7 +3611,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk_docs": q_bm25_topk_docs,
         "hybrid_rrf_topk": q_hybrid_rrf_topk,
         "funnel_events": q_funnel_events,
-        "hll_distinct_users": q_hll_distinct_users,
         "winnow_fingerprints": q_winnow_fingerprints,
         "winnow_pairs": q_winnow_pairs,
         "join_agg": q_join_agg,
@@ -3863,7 +3626,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "distinct_users": q_distinct_users,
         "source_name_pairs": q_source_name_pairs,
         "source_stats": q_source_stats,
-        "simhash_docs": q_simhash_docs,
     }
 
 
@@ -3967,9 +3729,6 @@ def oracle_sql() -> dict[str, str]:
                      AS members,
                    count(*) AS n
             FROM n GROUP BY fp HAVING count(*) > 1 ORDER BY fp""",
-        "ngram_jaccard_pairs": f"""
-            WITH {CAPPED_SHINGLE_CTE}
-            SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.5 ORDER BY id_a, id_b""",
         "minhash_lsh_pairs": f"""
             WITH {SHINGLE_CTE}
             SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8 ORDER BY id_a, id_b""",
@@ -3981,15 +3740,6 @@ def oracle_sql() -> dict[str, str]:
             FROM jac
             WHERE jaccard >= 0.8 AND ((id_a % 5 = 0) <> (id_b % 5 = 0))
             ORDER BY new_id, hist_id""",
-        "cross_corpus_dedup_survivors": f"""
-            WITH {SHINGLE_CTE}
-            SELECT d.doc_id FROM documents d
-            WHERE d.doc_id % 5 = 0 AND NOT EXISTS (
-              SELECT 1 FROM jac
-              WHERE jaccard >= 0.8
-                AND ((id_a = d.doc_id AND id_b % 5 <> 0)
-                  OR (id_b = d.doc_id AND id_a % 5 <> 0)))
-            ORDER BY doc_id""",
         "jaccard_threshold_sweep": f"""
             WITH {SHINGLE_CTE},
             t(threshold) AS (VALUES (CAST(0.8 AS DOUBLE)), (CAST(0.85 AS DOUBLE)),
@@ -4000,14 +3750,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(CASE WHEN p.jaccard >= t.threshold THEN 1 ELSE 0 END) AS BIGINT)
                      AS n_pairs
             FROM t, p GROUP BY threshold ORDER BY threshold""",
-        "containment_pairs": """
-            SELECT a.doc_id AS inner_id, b.doc_id AS outer_id
-            FROM documents a, documents b
-            WHERE a.doc_id != b.doc_id AND length(a.text) >= 12
-              AND (length(a.text) < length(b.text)
-                   OR (length(a.text) = length(b.text) AND a.doc_id < b.doc_id))
-              AND contains(b.text, a.text)
-            ORDER BY inner_id, outer_id""",
         "ann_topk": """
             WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS e
                        FROM embeddings WHERE vec_id < 8),
@@ -4318,147 +4060,6 @@ def oracle_sql() -> dict[str, str]:
                      AS depth
             FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
             ORDER BY user_id""",
-        # HLL: registers (md5 bucket + bin-length rho) and the
-        # scaled-integer harmonic sum replayed exactly; the numerator
-        # constant is the SAME Python float the Spark plan embeds
-        "hll_distinct_users": f"""
-            WITH v AS (SELECT event_type,
-                              md5(CAST(user_id AS VARCHAR)) AS h FROM events
-                       WHERE user_id IS NOT NULL),
-            r AS (SELECT event_type,
-                         CAST(concat('0x', substr(h, 1, 2)) AS BIGINT) AS bucket,
-                         CAST(concat('0x', substr(h, 3, 13)) AS BIGINT) AS w
-                  FROM v),
-            regs AS (SELECT event_type, bucket,
-                            max(CASE WHEN w = 0 THEN 53
-                                     ELSE 53 - length(bin(w)) END) AS m
-                     FROM r GROUP BY event_type, bucket),
-            agg AS (SELECT event_type,
-                           sum(CAST(pow(2, 53 - m) AS BIGINT)) AS s_present,
-                           count(*) AS n_present
-                    FROM regs GROUP BY event_type),
-            est AS (SELECT event_type,
-                           256 - n_present AS zeros,
-                           CAST(s_present
-                                + (256 - n_present)
-                                  * CAST(pow(2, 53) AS BIGINT) AS DOUBLE) AS total
-                    FROM agg)
-            SELECT event_type,
-                   round(CASE WHEN {_HLL_NUM!r} / total <= 640.0 AND zeros > 0
-                              THEN 256.0 * ln(256.0 / zeros)
-                              ELSE {_HLL_NUM!r} / total END, 4) AS est
-            FROM est ORDER BY event_type""",
-        # sketch rollup: the ALL row re-derives from the per-type
-        # registers by bucket-wise max — never from the data
-        "hll_rollup_users": f"""
-            WITH v AS (SELECT event_type,
-                              md5(CAST(user_id AS VARCHAR)) AS h FROM events
-                       WHERE user_id IS NOT NULL),
-            r AS (SELECT event_type,
-                         CAST(concat('0x', substr(h, 1, 2)) AS BIGINT) AS bucket,
-                         CAST(concat('0x', substr(h, 3, 13)) AS BIGINT) AS w
-                  FROM v),
-            regs AS (SELECT event_type, bucket,
-                            max(CASE WHEN w = 0 THEN 53
-                                     ELSE 53 - length(bin(w)) END) AS m
-                     FROM r GROUP BY event_type, bucket),
-            merged AS (SELECT event_type, bucket, m FROM regs
-                     UNION ALL
-                     SELECT 'ALL' AS event_type, bucket, max(m) AS m
-                     FROM regs GROUP BY bucket),
-            agg AS (SELECT event_type,
-                           sum(CAST(pow(2, 53 - m) AS BIGINT)) AS s_present,
-                           count(*) AS n_present
-                    FROM merged GROUP BY event_type),
-            est AS (SELECT event_type,
-                           256 - n_present AS zeros,
-                           CAST(s_present
-                                + (256 - n_present)
-                                  * CAST(pow(2, 53) AS BIGINT) AS DOUBLE) AS total
-                    FROM agg)
-            SELECT event_type,
-                   round(CASE WHEN {_HLL_NUM!r} / total <= 640.0 AND zeros > 0
-                              THEN 256.0 * ln(256.0 / zeros)
-                              ELSE {_HLL_NUM!r} / total END, 4) AS est
-            FROM est ORDER BY event_type""",
-        "kmv_distinct_users": """
-            WITH v AS (SELECT DISTINCT event_type,
-                              CAST(concat('0x',
-                                substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                                AS BIGINT) AS h
-                       FROM events WHERE user_id IS NOT NULL),
-            r AS (SELECT event_type, h,
-                         row_number() OVER (PARTITION BY event_type
-                                            ORDER BY h) AS rn FROM v),
-            a AS (SELECT event_type, max(h) AS h_k, count(*) AS n
-                  FROM r WHERE rn <= 64 GROUP BY event_type)
-            SELECT event_type,
-                   round(CASE WHEN n < 64 THEN CAST(n AS DOUBLE)
-                              ELSE 63.0 / (CAST(greatest(h_k, 1) AS DOUBLE)
-                                           / 1152921504606846976.0) END, 4) AS est
-            FROM a ORDER BY event_type""",
-        # histogram quantiles: bins, ranks, and the within-bin
-        # interpolation replayed with identical IEEE arithmetic
-        "binned_price_quantiles": """
-            WITH src AS (SELECT o_orderpriority AS grp,
-                                CAST(o_totalprice AS DOUBLE) AS v
-                         FROM orders WHERE o_totalprice IS NOT NULL),
-            rng AS (SELECT grp, min(v) AS lo, max(v) AS hi,
-                           count(*) AS n FROM src GROUP BY grp),
-            b AS (SELECT s.grp AS grp,
-                         CAST(CASE WHEN r.hi = r.lo THEN 0
-                              ELSE least(floor((s.v - r.lo)
-                                               / ((r.hi - r.lo) / 256.0)), 255)
-                              END AS INT) AS bin
-                  FROM src s JOIN rng r
-                    ON s.grp IS NOT DISTINCT FROM r.grp),
-            cnts AS (SELECT grp, bin, count(*) AS cnt FROM b GROUP BY grp, bin),
-            cum AS (SELECT grp, bin, cnt,
-                           sum(cnt) OVER (PARTITION BY grp ORDER BY bin) AS cum
-                    FROM cnts),
-            qs AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q),
-            ranks AS (SELECT r.grp, q.q,
-                             CAST(ceil(q.q * r.n) AS BIGINT) AS rnk, r.lo, r.hi
-                      FROM rng r, qs q),
-            cov AS (SELECT k.grp, k.q, k.lo, k.hi, k.rnk, c.bin, c.cnt, c.cum
-                    FROM ranks k JOIN cum c
-                      ON c.grp IS NOT DISTINCT FROM k.grp
-                         AND c.cum >= k.rnk
-                         AND c.cum - c.cnt < k.rnk)
-            SELECT grp AS o_orderpriority, q,
-                   round(CASE WHEN hi = lo THEN lo
-                         ELSE lo + ((hi - lo) / 256.0)
-                              * (CAST(bin AS DOUBLE)
-                                 + CAST(rnk - (cum - cnt) AS DOUBLE)
-                                   / CAST(cnt AS DOUBLE)) END, 4) AS est
-            FROM cov ORDER BY o_orderpriority, q""",
-        # count-min: cells and probes share the seeded md5 buckets —
-        # pure integer arithmetic, exact match
-        "cms_token_counts": r"""
-            WITH toks AS (SELECT t.term AS token
-                          FROM documents,
-                               unnest(regexp_extract_all(trim(lower(text)), '\S+'))
-                                 AS t(term)),
-            top AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt
-                    FROM toks GROUP BY token
-                    ORDER BY exact_cnt DESC, token LIMIT 20),
-            seeds AS (SELECT unnest(range(4)) AS seed),
-            cells AS (SELECT s.seed,
-                             CAST(concat('0x',
-                               substr(md5(CAST(s.seed AS VARCHAR) || ':' || t.token),
-                                      1, 6)) AS BIGINT) % 256 AS bucket,
-                             CAST(count(*) AS BIGINT) AS cnt
-                      FROM toks t, seeds s GROUP BY 1, 2),
-            probes AS (SELECT p.token, s.seed,
-                              CAST(concat('0x',
-                                substr(md5(CAST(s.seed AS VARCHAR) || ':' || p.token),
-                                       1, 6)) AS BIGINT) % 256 AS bucket
-                       FROM top p, seeds s),
-            est AS (SELECT p.token, min(coalesce(c.cnt, 0)) AS est_cnt
-                    FROM probes p LEFT JOIN cells c USING (seed, bucket)
-                    GROUP BY p.token)
-            SELECT t.token, t.exact_cnt, e.est_cnt
-            FROM top t JOIN est e USING (token) ORDER BY token""",
         # BM25: postings/df/idf/score/rank all re-derived relationally —
         # Lucene-style idf ln(1 + (N - df + .5)/(df + .5)), k1=1.2 b=.75
         "bm25_topk_docs": r"""
@@ -4838,36 +4439,6 @@ def oracle_sql() -> dict[str, str]:
                    round(inter / (na.n + nb.n - inter), 6) AS jaccard
             FROM inter JOIN sz na ON na.source = src_a JOIN sz nb ON nb.source = src_b
             ORDER BY src_a, src_b""",
-        "snapshot_diff_docs": """
-            WITH v2 AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END AS text
-              FROM documents WHERE doc_id % 11 <> 5
-              UNION ALL
-              SELECT doc_id + 1000000 AS doc_id, text
-              FROM documents WHERE doc_id % 13 = 1),
-            o AS (SELECT doc_id AS id,
-                         md5(COALESCE(CAST(length(text) AS VARCHAR) || ':' || text, 'n')) AS fp
-                  FROM documents),
-            n AS (SELECT doc_id AS id,
-                         md5(COALESCE(CAST(length(text) AS VARCHAR) || ':' || text, 'n')) AS fp
-                  FROM v2),
-            j AS (
-              SELECT COALESCE(o.id, n.id) AS doc_id,
-                     CASE WHEN o.fp IS NULL THEN 'added'
-                          WHEN n.fp IS NULL THEN 'removed'
-                          WHEN o.fp <> n.fp THEN 'changed' END AS status
-              FROM o FULL OUTER JOIN n ON o.id = n.id)
-            SELECT doc_id, status FROM j WHERE status IS NOT NULL
-            ORDER BY doc_id""",
-        "incremental_dedup_docs": """
-            SELECT n.doc_id, md5(n.text) AS fp
-            FROM documents n
-            WHERE n.doc_id % 3 = 0
-              AND NOT EXISTS (
-                SELECT 1 FROM documents h
-                WHERE h.doc_id % 7 <> 3 AND md5(h.text) = md5(n.text))
-            ORDER BY n.doc_id""",
         "vocab_top_tokens": """
             WITH tok AS (
               SELECT doc_id AS doc,
@@ -5478,23 +5049,6 @@ def oracle_sql() -> dict[str, str]:
                    max(s) AS max_bucket,
                    CAST(sum(s * (s - 1) / 2) AS BIGINT) AS n_cand_pairs
             FROM bu GROUP BY 1 ORDER BY band_idx""",
-        "simhash_docs": """
-            WITH toks AS (
-              SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-              FROM documents),
-            th AS (SELECT doc_id,
-                          CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS h
-                   FROM toks),
-            bits AS (
-              SELECT doc_id, b.bit,
-                     sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-              FROM th, (SELECT unnest(range(32)) AS bit) b GROUP BY 1, 2),
-            sim AS (
-              SELECT doc_id,
-                     CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit)
-                              ELSE 0 END) AS BIGINT) AS simhash
-              FROM bits GROUP BY 1)
-            SELECT doc_id, simhash FROM sim ORDER BY doc_id""",
         # image-fixture oracles: DuckDB reads the SAME parquet file the
         # Spark query reads (written by _images_parquet — called below so
         # the file exists regardless of which side the driver runs

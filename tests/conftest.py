@@ -13,7 +13,7 @@ def spark():
     # exports it; without it 12 cores = 24 runnable threads (JVM tasks +
     # Python workers) on a 32-vCPU host — parallel enough to move the
     # suite, with headroom so host steal does not serialize saturated
-    # stages (see bench.py)
+    # stages
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "12"))
     s = get_spark(app_name="yadf-spark-tests", cores=cores, driver_memory="8g")
     yield s

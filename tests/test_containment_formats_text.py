@@ -1,5 +1,5 @@
-"""Containment pass, output formats (golden strings from the reference),
-and text-analysis functions."""
+"""Output formats (golden strings from the reference), sinks and
+text-analysis functions."""
 
 from __future__ import annotations
 
@@ -8,75 +8,8 @@ import os
 from pyspark.sql import functions as F
 
 from yadf_spark.functions import text as T
-from yadf_spark.operators import containment, exact
+from yadf_spark.operators import exact
 from yadf_spark.sinks import formats
-
-
-# --- containment ------------------------------------------------------------
-
-def _cap_df(spark):
-    rows = [
-        ("short", "red fox jumps high"),
-        ("long", "the red fox jumps high over fences"),  # contains 'short'
-        ("other", "completely unrelated caption text here"),
-        ("dup1", "same same same same"),
-        ("dup2", "same same same same"),  # equal captions contain each other
-        ("tiny", "hi"),  # < k words
-    ]
-    return spark.createDataFrame(rows, "image_id string, caption string")
-
-
-def test_containment_pairs(spark):
-    got = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment.containment_pairs(_cap_df(spark)).collect()
-    }
-    assert ("short", "long") in got
-    assert ("dup1", "dup2") in got  # equality = mutual containment, id order
-    assert not any("other" in p for p in got)
-    assert not any(("long", "short") == p for p in got)
-
-
-def test_containment_hot_shingle_cap_logged(spark):
-    rows = [(f"r{i}", "very common shingle words here") for i in range(20)]
-    df = spark.createDataFrame(rows + [("x", "rare unique caption entirely")],
-                               "image_id string, caption string")
-    logged = []
-    out = containment.containment_pairs(df, max_shingle_df=5, log=logged.append)
-    assert out.count() == 0  # identical captions' shingles all dropped by cap
-    assert logged and "dropped" in logged[0]
-
-
-def test_word_probe_cuts_candidates_without_losing_pairs(spark):
-    """The rarest-shingle probe must produce a SUBSET of the symmetric
-    join's candidates (strictly fewer on an overlapping corpus) while
-    the verified pair set stays identical (VERDICT r2 item 5)."""
-    rows = [("c", "alpha beta gamma delta")]
-    # many captions sharing a common 3-shingle block -> symmetric join fans out
-    rows += [(f"x{i}", f"alpha beta gamma tail{i} word{i}") for i in range(12)]
-    df = spark.createDataFrame(rows, "image_id string, caption string")
-    base = df.select(F.col("image_id").alias("id"), F.col("caption").alias("text"))
-    n_probe = containment._word_candidates(base, 3, 1000).count()
-    n_sym = containment._word_candidates(base, 3, 1000, symmetric=True).count()
-    assert n_probe < n_sym
-    got = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment.containment_pairs(df).collect()
-    }
-    # every xN contains nothing and is contained by nothing; no pair of
-    # them verifies — but the shared prefix makes them all candidates of
-    # each other in the symmetric join. 'c' is contained in none either
-    # (different tails). Verified output must be empty both ways.
-    assert got == set()
-
-
-def test_bucket_containment_variant(spark):
-    df = _cap_df(spark).withColumn("bucket", F.lit(1))
-    got = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment.bucket_containment_pairs(df, "bucket").collect()
-    }
-    assert ("short", "long") in got
 
 
 # --- output formats ---------------------------------------------------------
@@ -315,57 +248,6 @@ def test_winnow_short_text(spark):
     assert len(out["fps"]) == 1  # whole-text fallback
 
 
-def test_suffix_array_containment_agrees_with_nested():
-    """The generalized-suffix-array path must produce exactly the nested
-    scan's pairs on randomized corpora with planted containments."""
-    import random
-
-    from yadf_spark.operators.containment import (
-        _containment_nested,
-        _containment_suffix_array,
-    )
-
-    rng = random.Random(13)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    for trial in range(20):
-        items = []
-        for i in range(rng.randint(2, 15)):
-            t = " ".join(rng.choices(words, k=rng.randint(1, 12)))
-            items.append((f"d{trial}-{i:02d}", t))
-        # plant: substrings, duplicates, and one empty-ish short text
-        base = items[0][1]
-        if len(base) > 8:
-            items.append((f"d{trial}-sub", base[2 : 2 + rng.randint(3, len(base) - 3)]))
-        items.append((f"d{trial}-dup", base))
-        items = sorted(items, key=lambda t: (len(t[1]), t[0]))
-        assert _containment_suffix_array(items) == sorted(_containment_nested(items)), items
-
-
-def test_bucket_containment_uses_sa_for_big_buckets(spark):
-    """Force the SA path (threshold 0) through the Spark operator and
-    check it still matches the small-bucket (nested) output."""
-    from yadf_spark.operators import containment as C
-
-    rows = [
-        ("b", "i1", "the quick brown fox"),
-        ("b", "i2", "quick brown"),
-        ("b", "i3", "the quick brown fox jumps over the dog"),
-        ("b", "i4", "unrelated caption entirely"),
-        ("b", "i5", "quick brown"),
-    ]
-    df = spark.createDataFrame(rows, "bucket string, image_id string, caption string")
-    sa = {
-        (r["inner_id"], r["outer_id"])
-        for r in C.bucket_containment_pairs(df, "bucket", sa_threshold_chars=0).collect()
-    }
-    nested = {
-        (r["inner_id"], r["outer_id"])
-        for r in C.bucket_containment_pairs(df, "bucket", sa_threshold_chars=10**9).collect()
-    }
-    assert sa == nested
-    assert ("i2", "i1") in sa and ("i1", "i3") in sa and ("i2", "i5") in sa
-
-
 def test_webdataset_shard_export_roundtrip(spark, tmp_path):
     """Tar shard export: every row lands in exactly one shard, payload
     and caption members pair by basename, member order is id-sorted,
@@ -415,19 +297,3 @@ def test_webdataset_reexport_removes_stale_shards(spark, tmp_path):
     write_webdataset_shards(df, out, n_shards=2)
     second = set(os.listdir(out))
     assert second <= {"shard-00000.tar", "shard-00001.tar"}
-
-
-def test_bucket_containment_tolerates_null_captions(spark):
-    """Regression: a null caption in a bucket crashed the whole
-    applyInPandas job on len(None); nulls now degrade out of the bucket
-    (G7 posture) while real containments still surface."""
-    rows = [
-        ("i1", 0, "the quick brown fox"),
-        ("i2", 0, "so the quick brown fox jumps"),
-        ("i3", 0, None),
-    ]
-    df = spark.createDataFrame(rows, "image_id string, b int, caption string")
-    out = {(r.inner_id, r.outer_id) for r in
-           containment.bucket_containment_pairs(df, "b").collect()}
-    assert ("i1", "i2") in out
-    assert all("i3" not in p for p in out)

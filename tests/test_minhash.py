@@ -88,25 +88,6 @@ def test_salted_pair_generation_equals_plain_join(spark):
     assert plain == salted and plain
 
 
-def test_kernel_expansion_matches_jvm_paths(spark, monkeypatch):
-    """The Arrow kernel kept behind YADF_LSH_EXPAND=kernel must keep
-    producing the same pair set as the default JVM expansion (size-2
-    projection + HOF combinations) — it is the A/B baseline."""
-    df = _docs(spark)
-    sig = minhash.add_signature(df, CFG)
-    buckets = minhash.explode_bands(sig, CFG, id_col="image_id")
-    jvm = {
-        (r["id_a"], r["id_b"])
-        for r in minhash.candidate_pairs_from_buckets(buckets, 10**6).collect()
-    }
-    monkeypatch.setenv("YADF_LSH_EXPAND", "kernel")
-    kernel = {
-        (r["id_a"], r["id_b"])
-        for r in minhash.candidate_pairs_from_buckets(buckets, 10**6).collect()
-    }
-    assert jvm == kernel and jvm
-
-
 def test_band_passes_equals_single_pass(spark):
     """The multi-pass shuffle bound (SCALE.md stage 2) must be a pure
     execution-strategy change: identical candidate set for every k,

@@ -578,61 +578,6 @@ def test_streaming_near_dup_end_to_end(spark, tmp_path):
     assert set(idx.columns) == {"id", "band_idx", "band_hash", "batch_id"}
 
 
-def test_stateful_dedup_counts(spark, tmp_path):
-    """applyInPandasWithState: per-group cumulative dedup statistics
-    across micro-batches (maxFilesPerTrigger=1 splits the two parquet
-    files into two batches; state carries seen-hash sets between them)."""
-    from yadf_spark.streaming import stateful
-
-    b1 = spark.createDataFrame(
-        [("srcA", b"x1"), ("srcA", b"x1"), ("srcA", b"x2"), ("srcB", b"y1")],
-        "source string, bytes binary",
-    )
-    b2 = spark.createDataFrame(
-        [("srcA", b"x1"), ("srcA", b"x3"), ("srcB", b"y1"), ("srcB", b"y2")],
-        "source string, bytes binary",
-    )
-    src_dir = tmp_path / "st_src"
-    b1.coalesce(1).write.parquet(str(src_dir / "f0.parquet"))
-    b2.coalesce(1).write.parquet(str(src_dir / "f1.parquet"))
-
-    stream = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir) + "/*")
-    )
-    out = stateful.dedup_counts_stream(stream, group_col="source")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stats")
-        .option("checkpointLocation", str(tmp_path / "st_ck"))
-        .start()
-    )
-    # poll the sink: both availableNow termination and
-    # processAllAvailable stall on stateful timeout bookkeeping — wait
-    # for the 4 expected rows (2 groups x 2 batches), then stop
-    import time
-
-    deadline = time.time() + 150
-    while time.time() < deadline:
-        if spark.sql("select count(*) from dedup_stats").collect()[0][0] >= 4:
-            break
-        time.sleep(2)
-    q.stop()
-    rows = spark.sql("select * from dedup_stats").collect()
-    by_group = {}
-    for r in rows:
-        by_group.setdefault(r["group_key"], []).append(r)
-    # cumulative truth: srcA saw 5 rows / 3 distinct; srcB 3 rows / 2 distinct
-    a_final = max(by_group["srcA"], key=lambda r: r["total_rows"])
-    b_final = max(by_group["srcB"], key=lambda r: r["total_rows"])
-    assert a_final["total_rows"] == 5 and a_final["total_distinct"] == 3
-    assert b_final["total_rows"] == 3 and b_final["total_distinct"] == 2
-    assert sum(r["batch_rows"] for r in by_group["srcA"]) == 5
-    assert sum(r["batch_new"] for r in by_group["srcA"]) == 3
-    assert sum(r["batch_dups"] for r in by_group["srcA"]) == 2
-
-
 def test_dihedral_phash_orbit_invariance():
     """canonical_phash is identical for an image and ALL EIGHT of its
     D4 transforms — flips, 180, and the rot90 family that swaps w/h on

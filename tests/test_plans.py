@@ -91,21 +91,6 @@ def test_exact_edges_use_partial_aggregates_not_windows(spark):
         assert "partial_min" in plan
 
 
-def test_containment_probe_is_partial_agg_no_window(spark):
-    """The rarest-shingle probe must reduce to a map-side partial
-    min_by aggregate — not a row_number window (which would pin each
-    caption's shingle rows to one task) — and the plan must carry no
-    Window at all."""
-    from yadf_spark.operators import containment
-
-    rows = [(f"id{i}", f"alpha beta gamma tail{i} word{i}") for i in range(16)]
-    df = spark.createDataFrame(rows, "image_id string, caption string")
-    base = df.select(F.col("image_id").alias("id"), F.col("caption").alias("text"))
-    plan = _formatted(containment._word_candidates(base, 3, 1000))
-    assert "Window" not in plan
-    assert "partial_min_by" in plan or "min_by" in plan
-
-
 def test_full_hash_candidates_broadcast(spark):
     """The stage-4 semi-join of the candidate id set must be broadcast,
     not a shuffled join (O6: payload bytes stay put)."""
@@ -220,35 +205,6 @@ def test_aqe_splits_skewed_ladder_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_bucketed_join_needs_no_exchange(spark):
-    """Two tables bucketed identically on the join key must join with
-    ZERO shuffle exchanges (and, with sortBy, zero sorts) — the scan
-    satisfies the join's distribution. This is the co-located-join
-    layout the payload re-join stages assume at corpus scale."""
-    from yadf_spark.sinks import bucketed
-
-    rows = [(f"id{i:04d}", i) for i in range(256)]
-    a = spark.createDataFrame(rows, "image_id string, x long")
-    b = spark.createDataFrame(rows, "image_id string, y long")
-    bucketed.write_bucketed(a, "bt_a", num_buckets=8)
-    bucketed.write_bucketed(b, "bt_b", num_buckets=8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        j = bucketed.read_bucketed(spark, "bt_a").join(
-            bucketed.read_bucketed(spark, "bt_b"), "image_id"
-        )
-        plan = _formatted(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert j.count() == 256
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
 def test_partition_pruning_on_partitioned_table(spark, tmp_path):

@@ -73,28 +73,3 @@ def test_ladder_equals_naive_grouping(spark, payloads):
         bag[r["group_key"]].append(r["id"])
     got = {frozenset(v) for v in bag.values()}
     assert got == naive_groups(payloads)
-
-
-@pytest.mark.slow
-@settings(max_examples=150, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab \x00é", min_size=0, max_size=24),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_sa_containment_equals_nested_fuzz(texts):
-    """Pure-python fuzz (no Spark): tiny alphabets maximize containment
-    and duplicate collisions; includes NUL and non-ASCII chars."""
-    from yadf_spark.operators.containment import (
-        _containment_nested,
-        _containment_suffix_array,
-    )
-
-    items = sorted(
-        ((f"i{j:02d}", t) for j, t in enumerate(texts)), key=lambda t: (len(t[1]), t[0])
-    )
-    if any("\x00" in t for _, t in items):
-        return  # the operator routes NUL-bearing buckets to the nested scan
-    assert _containment_suffix_array(items) == sorted(set(_containment_nested(items)))

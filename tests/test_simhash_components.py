@@ -1,59 +1,10 @@
-"""SimHash + Hamming-band candidates + connected components."""
+"""Connected components, verify and exact-class clustering."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yadf_spark.operators import components, exact, simhash
-
-
-def test_simhash_identical_and_locality(spark):
-    rows = [
-        ("a", "the quick brown fox jumps over the lazy dog every single day"),
-        ("b", "the quick brown fox jumps over the lazy dog every single day"),
-        ("c", "the quick brown fox jumps over the lazy dog every single night"),
-        ("d", "parquet shuffle exchange partition skew salting broadcast join plan"),
-    ]
-    df = spark.createDataFrame(rows, "image_id string, caption string")
-    out = {r["image_id"]: r["simhash"] for r in simhash.add_simhash(df).collect()}
-    assert out["a"] == out["b"]
-
-    def ham(x, y):
-        return bin((x ^ y) & ((1 << 64) - 1)).count("1")
-
-    assert ham(out["a"], out["c"]) < ham(out["a"], out["d"])
-
-
-def test_simhash_empty_text(spark):
-    df = spark.createDataFrame([("a", ""), ("b", "x")], "image_id string, caption string")
-    vals = {r["image_id"]: r["simhash"] for r in simhash.add_simhash(df).collect()}
-    assert vals["a"] == 0
-
-
-def test_simhash_null_text_is_null_not_crash(spark):
-    """Null caption -> null token array -> the kernel must not call
-    len(None); output follows the repo's null-in/null-out posture, for
-    both token-level (k=1) and shingle-level (k>1) modes."""
-    df = spark.createDataFrame(
-        [("a", None), ("b", "some real text here")], "image_id string, caption string"
-    )
-    for k in (1, 3):
-        vals = {r["image_id"]: r["simhash"] for r in simhash.add_simhash(df, k=k).collect()}
-        assert vals["a"] is None and vals["b"] is not None
-
-
-def test_hamming_band_candidates_recall_and_precision(spark):
-    # ids with known 64-bit values: b = a with 2 bits flipped (<=3), c far away
-    a = 0x0123456789ABCDEF
-    rows = [("a", a), ("b", a ^ 0b11), ("c", a ^ ((1 << 60) | (1 << 40) | (1 << 20) | 1))]
-    df = spark.createDataFrame(rows, "image_id string, phash long")
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash.hamming_band_candidates(
-            df, "phash", "image_id", max_hamming=3
-        ).collect()
-    }
-    assert got == {("a", "b"): 2}
+from yadf_spark.operators import components, exact
 
 
 def test_connected_components_shapes(spark):

@@ -11,12 +11,15 @@ image + caption pairs:
   as DataFrame window/group operations with narrow-row shuffles
   (the ``bytes`` column never crosses an exchange);
 * near-duplicate detection: phash Hamming bands, MinHash over caption
-  shingles, SimHash, LSH band-join candidate generation with salted
-  skew handling, exact verification (Jaccard / Hamming / decoded-pixel
+  shingles, LSH band-join candidate generation with salted skew
+  handling, exact verification (Jaccard / Hamming / decoded-pixel
   PSNR), and connected-components clustering;
-* training-data pipeline operators over text/embedding tables:
-  exact + fuzzy text dedup, ANN similarity search, language id,
-  quality scoring, token counting, fingerprinting.
+* a streaming ingest gate: micro-batches checked against an on-disk
+  band index of everything already ingested;
+* training-data curation over text/embedding tables: exact + fuzzy
+  text dedup, ANN similarity search, language id, quality scoring,
+  token counting, fingerprinting, and leakage-guarded cluster-safe
+  splits.
 
 Everything is DataFrame API + column expressions + vectorized
 pandas/Arrow UDFs. No per-row Python in any hot path.

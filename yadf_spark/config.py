@@ -123,8 +123,6 @@ class NearDupConfig:
     lsh: LshConfig = field(default_factory=LshConfig)
     phash_bands: int = 4
     phash_band_bits: int = 16
-    phash_max_hamming: int = 3
-    caption_min_jaccard: float = 0.8
     psnr_min_db: float = 40.0
     max_cc_iterations: int = 20
     #: catch mirrored / vertically-flipped / 90-180-270-rotated reposts

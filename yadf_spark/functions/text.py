@@ -65,16 +65,6 @@ def shingle_hashes(text: Column, k: int = 3) -> Column:
     return F.transform(word_shingles(text, k), lambda s: F.xxhash64(s))
 
 
-def char_ngrams(text: Column, n: int = 5) -> Column:
-    """Distinct character n-grams (for n-gram Jaccard dedup)."""
-    t = text
-    ln = F.length(t)
-    grams = F.transform(
-        F.sequence(F.lit(1), ln - (n - 1)), lambda i: t.substr(i, F.lit(n))
-    )
-    return F.array_distinct(F.when(ln >= n, grams).otherwise(F.array(t)))
-
-
 def normalized(text: Column) -> Column:
     """Canonical form for fingerprinting: lowercase, strip non-alnum
     (keeping spaces), collapse whitespace."""

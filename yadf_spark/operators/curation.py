@@ -34,9 +34,8 @@ Scale posture, operator by operator:
   — per-partition top-k then a driver merge of k·p rows, never a full
   sort.
 
-All bucket math uses the md5-prefix portable hash (the same trick as
-simhash's ``md5_32`` mode, operators/simhash.py) so a DuckDB oracle can
-replay every assignment bit-for-bit.
+All bucket math uses the md5-prefix portable hash so a DuckDB oracle
+can replay every assignment bit-for-bit.
 """
 
 from __future__ import annotations

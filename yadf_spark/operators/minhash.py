@@ -23,7 +23,6 @@ Design for 10^12 rows:
 from __future__ import annotations
 
 import logging
-import os
 
 import numpy as np
 import pandas as pd
@@ -162,31 +161,6 @@ def _pairs_from_sorted_ids(ids):
     )
 
 
-def _expand_sorted_id_buckets(batches):
-    """mapInPandas kernel: one ``ids`` (sorted array) column in, all
-    (id_a <= id_b) combinations out, vectorized via ``triu_indices``.
-    Bounded per row by the caller's bucket-size filter (<= salt cap),
-    so one input row emits at most salt^2/2 pairs — no straggler risk.
-    Self-pairs from duplicate ids are filtered JVM-side by the caller.
-    Kept behind ``YADF_LSH_EXPAND=kernel`` for A/B only: the Arrow
-    boxing of each bucket's id array into Python objects made the
-    stage wait ~3x its CPU time; the JVM paths replaced it."""
-    import numpy as np
-
-    for pdf in batches:
-        outs_a: list = []
-        outs_b: list = []
-        for ids in pdf["ids"]:
-            arr = np.asarray(ids, dtype=object)
-            iu, ju = np.triu_indices(arr.shape[0], 1)
-            outs_a.append(arr[iu])
-            outs_b.append(arr[ju])
-        if outs_a:
-            yield pd.DataFrame(
-                {"id_a": np.concatenate(outs_a), "id_b": np.concatenate(outs_b)}
-            )
-
-
 def candidate_pairs_from_buckets(
     buckets: DataFrame,
     salt_bucket_above: int = 256,
@@ -259,9 +233,6 @@ def candidate_pairs_from_buckets(
             f"minhash-lsh: dropped {n_dropped} buckets larger than {max_bucket} rows"
         )
 
-    # the kernel's output type follows the caller's id type (captions key
-    # on string image_id, the SRP/IVF ANN paths on integer row ids)
-    id_type = grouped.schema["ids"].dataType.elementType.simpleString()
     cap = min(salt_bucket_above, max_bucket)
     # size-2 buckets — the overwhelming majority — are a pure JVM
     # projection (ids is sorted), never touching a Python worker: stage
@@ -271,18 +242,11 @@ def candidate_pairs_from_buckets(
     pair2 = grouped.filter(F.col("n") == 2).select(
         F.col("ids")[0].alias("id_a"), F.col("ids")[1].alias("id_b")
     )
-    if os.environ.get("YADF_LSH_EXPAND", "hof") == "kernel":
-        small = (
-            grouped.filter((F.col("n") > 2) & (F.col("n") <= cap))
-            .select("ids")
-            .mapInPandas(_expand_sorted_id_buckets, f"id_a {id_type}, id_b {id_type}")
-        )
-    else:
-        small = (
-            grouped.filter((F.col("n") > 2) & (F.col("n") <= cap))
-            .select(F.explode(_pairs_from_sorted_ids(F.col("ids"))).alias("_p"))
-            .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
-        )
+    small = (
+        grouped.filter((F.col("n") > 2) & (F.col("n") <= cap))
+        .select(F.explode(_pairs_from_sorted_ids(F.col("ids"))).alias("_p"))
+        .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
+    )
     small = (
         pair2.unionByName(small)
         # duplicate ids inside one bucket (duplicate input rows) would
@@ -409,8 +373,7 @@ def cross_candidate_pairs_from_buckets(
     """Candidate pairs BETWEEN two corpora: ``(id_a from A, id_b from B)``
     for every bucket key ``(band_idx, band_hash)`` populated on both
     sides — the batch-vs-history join a production ingest runs daily
-    (dedup today's crawl against the accumulated corpus by NEAR-dup, the
-    fuzzy complement of the bloom exact path, operators/bloom.py).
+    (dedup today's crawl against the accumulated corpus by NEAR-dup).
 
     Never a self-join: the history side is only ever paired against the
     batch, so a bucket costs ``n_a * n_b`` pair rows instead of the
@@ -575,8 +538,7 @@ def near_dup_anti_join(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Rows of ``batch`` with NO near-duplicate in ``history`` — the
-    batch-mode fuzzy ingest gate (the exact-match version is
-    ``bloom.incremental_dedup``; the streaming version is the persisted
+    batch-mode fuzzy ingest gate (the streaming version is the persisted
     band index, streaming/dedup.py). All ``batch`` columns pass through
     untouched; ``history`` never self-joins and never shuffles payload
     (bands + the candidate semi-join subset only)."""

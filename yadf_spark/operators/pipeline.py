@@ -211,8 +211,7 @@ def near_dup_gate(
 ) -> dict:
     """Fuzzy IMAGE ingest gate: match a new batch of image rows against
     a history corpus by near-duplicate — the image sibling of
-    ``minhash.near_dup_anti_join`` (text) and the exact-match
-    broadcast-Bloom path. Both frames must be ``prepare_images``-ready
+    ``minhash.near_dup_anti_join`` (text). Both frames must be ``prepare_images``-ready
     (caption/phash synthesized when absent) with distinct id spaces.
 
     Candidates come from the two-sided band join over each side's

@@ -70,17 +70,8 @@ class Checkpointer:
     spark: SparkSession
     workdir: str | None = None
     eager: bool = True
-    #: lazy mode only: truncate lineage at every ``stride``-th stage
-    #: boundary instead of every one (boundary k checkpoints when
-    #: (k+1) % stride == 0). A skipped boundary passes fn() through
-    #: untouched — its plan embeds in the next stage's. stride 1 is the
-    #: safe default (bounded plans no matter what the stages contain);
-    #: 2-3 trades bounded plan growth (~2-4x subtrees) for fewer
-    #: materialization barriers. Measured A/B: scripts/pipeline_ab.py.
-    stride: int = 1
     runs: list[StageRun] = field(default_factory=list)
     _lazy_stages: list = field(default_factory=list)
-    _boundary_idx: int = 0
     #: running lineage fingerprint: each stage's effective fingerprint
     #: folds in every PRIOR stage's, so changing an upstream stage's
     #: config invalidates everything after it. Without this, changing
@@ -105,17 +96,6 @@ class Checkpointer:
             # Observation-node scheme it cannot deadlock when metrics()
             # is called before the final action (a count simply
             # materializes the checkpoint).
-            k = self._boundary_idx
-            self._boundary_idx += 1
-            if (k + 1) % self.stride != 0:
-                # pass-through boundary (stride > 1): no truncation —
-                # the stage's plan embeds in the next stage's. Still
-                # recorded so metrics() reports every stage; rows are
-                # -1 because counting an un-truncated frame would
-                # re-run its whole (possibly expensive) subtree.
-                df = fn()
-                self._lazy_stages.append((name, None))
-                return df
             df = fn().localCheckpoint(eager=False)
             self._lazy_stages.append((name, df))
             return df
@@ -181,9 +161,5 @@ class Checkpointer:
             for r in self.runs
         ]
         for name, df in self._lazy_stages:
-            # df is None for a stride pass-through boundary: the stage
-            # ran (and is listed) but was never materialized on its own,
-            # so a row count would re-run its subtree — reported as -1
-            rows = df.count() if df is not None else -1
-            out.append({"stage": name, "rows": rows, "seconds": -1.0, "resumed": False})
+            out.append({"stage": name, "rows": df.count(), "seconds": -1.0, "resumed": False})
         return out

@@ -129,13 +129,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def restart_spark(cores: int, **kwargs) -> SparkSession:
-    """Stop any active session and start a fresh one at a new parallelism
-    level (used by the scaling-efficiency bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    # Clear the cached builder state so the new master takes effect.
-    SparkSession.builder._options = {}
-    return get_spark(cores=cores, **kwargs)
