@@ -1,15 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exposes each implemented operator from SURVEY.md §2 (plus
-the north_rule's near-dup operators and the training-data text/embedding
+the north_rule's near-dup operators and the training-data text
 operators) over the driver's TPC-H-ish testdata; ``oracle_sql()`` gives
 the DuckDB-equivalent ANSI SQL for every SQL-expressible entry. Column
 names and types are aligned on both sides (the driver's compare sorts
 columns by name and value-hashes).
 
 Every entry is oracle-checked. Algorithms DuckDB cannot replay in SQL
-alone (seeded SRP/IVF ANN, image decode/resize/embed, the flagship
-pipeline) are checked against stored-truth parquet: a single-process
+alone (BPE training, image decode/resize, the flagship pipeline) are checked against stored-truth parquet: a single-process
 replay of the same pure kernels (or the fixture's planted truth), which
 DuckDB then joins/ranks — so the oracle verifies the DISTRIBUTED
 plumbing against a sequential run of the identical seeded algorithm.
@@ -30,7 +29,7 @@ from pyspark.sql import functions as F
 
 from yadf_spark.config import Factor, LadderConfig, LshConfig
 from yadf_spark.functions import text as T
-from yadf_spark.operators import curation, exact, minhash, retrieval, similarity
+from yadf_spark.operators import curation, exact, minhash, retrieval
 
 # Portable (md5/sha256) ladder configuration for string payloads — the
 # DuckDB oracle replicates every hash bit-for-bit. Thresholds are scaled
@@ -38,8 +37,6 @@ from yadf_spark.operators import curation, exact, minhash, retrieval, similarity
 DOC_LADDER = LadderConfig(
     prefix_len=16, suffix_len=16, suffix_threshold=256, full_hash_min_size=32, algo="md5"
 )
-
-EMB_DIM = 64
 
 STOP_SQL = ", ".join(f"'{s}'" for s in T.STOPWORDS)
 
@@ -367,9 +364,8 @@ def q_normalized_dedup_docs(spark, sf_dir):
     land in one group. The corpus has no such variants naturally, so the
     query PLANTS them: every 20th document re-enters as an
     uppercased+punctuated copy under ``doc_id + 1_000_000`` (both
-    engines build the identical union — the semantic_dedup planted-
-    perturbation pattern), and the output is exactly the plant list:
-    non-vacuous by construction. One narrow codegen map + one partial-agg
+    engines build the identical union), and the output is exactly the
+    plant list: non-vacuous by construction. One narrow codegen map + one partial-agg
     groupBy on a 16-byte key; text never shuffles beyond the members
     collect (bounded: only n>1 groups survive)."""
     d = _t(spark, sf_dir, "documents")
@@ -476,52 +472,9 @@ def q_jaccard_threshold_sweep(spark, sf_dir):
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-5 for query vectors vec_id < 8."""
     e = _t(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(e, e.filter("vec_id < 8"), k=5).orderBy(
+    return retrieval.brute_force_topk(e, e.filter("vec_id < 8"), k=5).orderBy(
         "query_id", "rank"
     )
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (exact path, cosine >= 0.45)."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dup_pairs(e, EMB_DIM, 0.45, exact=True).orderBy(
-        "id_a", "id_b"
-    )
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style semantic dedup over embeddings ∪ planted exact
-    copies (vec_id % 17, shifted ids): portable-SRP cells (4 bands x 4
-    bits, hyperplanes as exact rationals both engines rebuild), within-
-    cell cosine >= 0.8, earliest-id survivor per dominated pair. The
-    0.8 threshold sits far above the organic pair ceiling (~0.51) and
-    far below the copies' 1.0, so the verdict is float-noise-proof;
-    the cell/band machinery is what finds the copies."""
-    e = _t(spark, sf_dir, "embeddings")
-    planted = e.where(F.col("vec_id") % 17 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    allv = e.select("vec_id", "embedding").unionByName(planted)
-    out = similarity.semantic_dedup(allv, EMB_DIM, 0.8)
-    return out.withColumnRenamed("id", "vec_id").orderBy("vec_id")
-
-
-def _semdedup_cell_sql(band: int, n_bits: int = 4, dim: int = 64) -> str:
-    """DuckDB expression for one band's portable-SRP cell over ``v``
-    (a DOUBLE[] column) — plane components embedded as the same exact
-    rationals ``w/10007.0 - 0.5`` the Spark side materializes."""
-    prime = similarity._PLANE_PRIME
-    bits = []
-    for bit in range(n_bits):
-        comps = ", ".join(
-            f"({similarity.portable_plane_w(band, bit, d)}/{prime}.0 - 0.5)"
-            for d in range(dim)
-        )
-        bits.append(
-            f"CASE WHEN round(list_dot_product(v, [{comps}]), 4) >= 0"
-            f" THEN {1 << bit} ELSE 0 END"
-        )
-    return " + ".join(bits)
 
 
 def q_token_stats(spark, sf_dir):
@@ -773,7 +726,7 @@ def q_hybrid_rrf_topk(spark, sf_dir):
         F.array_join(F.slice(toks, 1, 6), " ").alias("qtext"),
     )
     lex = retrieval.bm25_topk(d, queries, k=10)
-    dense = similarity.brute_force_topk(e, e.filter("vec_id < 8"), k=10).select(
+    dense = retrieval.brute_force_topk(e, e.filter("vec_id < 8"), k=10).select(
         "query_id", "neighbor_id", "rank"
     )
     out = retrieval.rrf_fuse([lex.select("query_id", "neighbor_id", "rank"), dense], k=5)
@@ -1117,48 +1070,8 @@ def q_mix_sampled_docs(spark, sf_dir):
 #: plus one guaranteed miss so zero-hit coverage is exercised
 DENY_TERMS = ["spark", "window", "dup", "zzz_never_present"]
 
-#: cluster count for the k-means contract queries
-KMEANS_K = 8
-
-
 def _deny_in_list() -> str:
     return ", ".join(f"'{t}'" for t in sorted(DENY_TERMS))
-
-
-def _kmeans_cte() -> str:
-    """The DuckDB replay of kmeans_lloyd(k=KMEANS_K, iterations=2):
-    two unrolled assignment passes around one rounded centroid update,
-    every arithmetic step (DOUBLE[] dot products, 6dp rounding,
-    cos DESC / cluster tie-break) identical to the Spark plan's."""
-
-    def apass(s: int, cents: str) -> str:
-        return f"""
-            s{s} AS (SELECT e.vec_id, {cents}.cluster,
-                   round(CASE WHEN sqrt(list_dot_product(e.emb, e.emb)) *
-                                   sqrt(list_dot_product({cents}.c, {cents}.c)) > 0
-                         THEN list_dot_product(e.emb, {cents}.c) /
-                              (sqrt(list_dot_product(e.emb, e.emb)) *
-                               sqrt(list_dot_product({cents}.c, {cents}.c)))
-                         ELSE 0.0 END, 6) AS cos
-            FROM e, {cents}),
-            a{s} AS (SELECT vec_id, cluster, cos,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY cos DESC, cluster) AS rk
-            FROM s{s})"""
-
-    return f"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                   FROM embeddings WHERE embedding IS NOT NULL),
-        c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster,
-                      emb AS c
-               FROM (SELECT * FROM e ORDER BY vec_id LIMIT {KMEANS_K})),
-        {apass(1, "c0")},
-        b1 AS (SELECT a1.cluster, e.emb FROM a1 JOIN e USING (vec_id) WHERE a1.rk = 1),
-        m1 AS (SELECT cluster, i, round(avg(emb[i]), 6) AS x
-               FROM b1, unnest(generate_series(1, len(emb))) AS t(i)
-               GROUP BY 1, 2),
-        c1 AS (SELECT cluster, list(x ORDER BY i) AS c FROM m1 GROUP BY 1),
-        {apass(2, "c1")}"""
 
 
 def q_denylist_hits_docs(spark, sf_dir):
@@ -1168,7 +1081,7 @@ def q_denylist_hits_docs(spark, sf_dir):
     operator is a narrow map — zero shuffle at any corpus size. The
     sorted matched-term array is emitted comma-joined as a string
     (empty string when clean): the driver's canonicalizer cannot hash
-    array cells, the same trap that red-rowed pq_codes in round 4."""
+    array cells."""
     d = _t(spark, sf_dir, "documents")
     out = curation.denylist_hits(d, "doc_id", "text", DENY_TERMS)
     return out.select(
@@ -1186,30 +1099,6 @@ def q_denylist_clean_docs(spark, sf_dir):
     return out.select("doc_id", "source").orderBy("doc_id")
 
 
-def q_kmeans_assign(spark, sf_dir):
-    """Distributed Lloyd k-means (k=8, 2 passes) over the embeddings:
-    deterministic init (8 id-smallest vectors), cosine assignment and
-    centroid means rounded to 6dp so DuckDB unrolls the identical
-    passes. Assignment is a narrow map (centroids are plan literals,
-    zero Exchange — plan-pinned in test_similarity); the update's
-    shuffle is partitions*k*dim rows regardless of corpus size."""
-    e = _t(spark, sf_dir, "embeddings")
-    out = similarity.kmeans_lloyd(e, "vec_id", "embedding", k=8, iterations=2)
-    return out.orderBy("vec_id")
-
-
-def q_kmeans_clusters(spark, sf_dir):
-    """Cluster profile of the k-means assignment: size and mean cosine
-    per cluster — the balance signal a cluster-weighted sampler reads."""
-    e = _t(spark, sf_dir, "embeddings")
-    out = similarity.kmeans_lloyd(e, "vec_id", "embedding", k=8, iterations=2)
-    return (
-        out.groupBy("cluster")
-        .agg(F.count("*").alias("n"), F.round(F.avg("cosine"), 6).alias("mean_cosine"))
-        .orderBy("cluster")
-    )
-
-
 def q_fuzzy_decontaminate_docs(spark, sf_dir):
     """Fuzzy benchmark decontamination: every-50th document stands in
     as the benchmark suite; corpus docs whose word-3-gram Jaccard
@@ -1221,30 +1110,6 @@ def q_fuzzy_decontaminate_docs(spark, sf_dir):
     bench = d.where(F.col("doc_id") % 50 == 0)
     out = curation.fuzzy_decontaminate(d, bench, "doc_id", "text", threshold=0.8)
     return out.orderBy("doc_id", "bench_id")
-
-
-def q_cluster_prune_keep(spark, sf_dir):
-    """SSL-prototypes data pruning: drop each k-means cluster's most
-    prototypical 30% (cosine above the per-cluster 0.7-quantile). The
-    threshold frame is k rows broadcast onto a map-side join; only
-    (cluster, cosine) ever cross an exchange."""
-    e = _t(spark, sf_dir, "embeddings")
-    out = similarity.cluster_prune(
-        e, "vec_id", "embedding", k=KMEANS_K, iterations=2, drop_frac=0.3
-    )
-    return out.orderBy("vec_id")
-
-
-def q_cluster_balanced_sample(spark, sf_dir):
-    """Cluster-balanced sampling: k-means assignment composed with the
-    per-group content-hash cap — at most 40 vectors per semantic
-    cluster, chosen by md5 order so the sample is stable across reruns
-    and cluster sizes. The DoReMi/SemDeDup-era recipe for flattening a
-    skewed embedding distribution before training."""
-    e = _t(spark, sf_dir, "embeddings")
-    assigned = similarity.kmeans_lloyd(e, "vec_id", "embedding", k=KMEANS_K, iterations=2)
-    out = curation.cap_per_group(assigned, "vec_id", "cluster", k=40, salt="kbal")
-    return out.select("vec_id", "cluster").orderBy("vec_id")
 
 
 def q_lm_score_docs(spark, sf_dir):
@@ -1524,28 +1389,6 @@ def q_json_props_stats(spark, sf_dir):
     )
 
 
-def q_label_centroids(spark, sf_dir):
-    """Exact per-label embedding centroids — dim parallel sum aggregates
-    (one map-side partial agg; no posexplode row amplification), then a
-    tiny unpivot of the label x dim means."""
-    em = _t(spark, sf_dir, "embeddings")
-    return similarity.label_centroids(em, "label", "embedding", dim=64).orderBy(
-        "label", "pos"
-    )
-
-
-def q_embedding_outliers(spark, sf_dir):
-    """Mislabeled-pair sweep: rows whose embedding points away from
-    their own label's exact centroid (cosine < -0.05). Centroid = the
-    label_centroids partial-agg trick; scoring = broadcast join +
-    zero-shuffle JVM dot product; round-6 contract so DuckDB replays
-    the arithmetic bit-for-bit."""
-    em = _t(spark, sf_dir, "embeddings")
-    return similarity.label_outliers(
-        em, "vec_id", "label", "embedding", dim=64, max_cosine=-0.05
-    ).orderBy("vec_id")
-
-
 def q_source_name_pairs(spark, sf_dir):
     """Edit-distance (Levenshtein) pairs over the source dimension —
     the fuzzy-name-match primitive of dedup over metadata columns.
@@ -1596,9 +1439,9 @@ def q_cc_components(spark, sf_dir):
 
 # The driver's correctness harness runs at this scale factor (driver
 # contract: "runs YOUR Spark query AND your oracle SQL side-by-side at
-# sf=0.01"). The seeded-ANN truth replays below read the same parquet
-# the driver registers as the `embeddings` view, so the replayed
-# candidate ids join back against that view inside the oracle SQL.
+# sf=0.01"). The BPE truth replays read the same parquet the oracle
+# registers as the `documents` view, so the replayed merges and
+# encodings describe exactly the rows the oracle SQL sees.
 # yadf_spark.testing.run_contract overrides this attr when it checks the
 # contract at a different sf (the in-repo sf0.001 replica).
 CONTRACT_SF_DIR = "/root/testdata/sf0.01"
@@ -1608,8 +1451,8 @@ _SF_FINGERPRINT_CACHE: dict[tuple, str] = {}
 
 
 def _sf_content_fingerprint(stats: tuple) -> str:
-    """md5 over the contract-sf source tables the stored-truth replays
-    read (documents + embeddings), 8 hex chars. Memoized at module
+    """md5 over the contract-sf source table the stored-truth replays
+    read (documents), 8 hex chars. Memoized at module
     level on the (path, mtime_ns, size) tuple so oracle_sql() — which
     interpolates every truth path on each call — doesn't rehash
     unchanged files."""
@@ -1629,438 +1472,18 @@ def _sf_content_fingerprint(stats: tuple) -> str:
 
 def _sf_slug() -> str:
     """Cache-key slug for the stored-truth parquet replays: the sf-dir
-    basename PLUS a content fingerprint of the tables they derive from.
+    basename PLUS a content fingerprint of the table they derive from.
     ADVICE r4: a slug keyed only by basename silently replays stale
     truth if the contract fixture's content changes under the same
     path — the fingerprint makes any such change a cache miss."""
     base = os.path.basename(CONTRACT_SF_DIR.rstrip("/"))
-    stats = []
-    for tbl in ("documents", "embeddings"):
-        p = f"{CONTRACT_SF_DIR}/{tbl}.parquet"
-        try:
-            st = os.stat(p)
-            stats.append((p, st.st_mtime_ns, st.st_size))
-        except FileNotFoundError:
-            stats.append((p, 0, 0))
-    return f"{base}-{_sf_content_fingerprint(tuple(stats))}"
-
-
-def _srp_truth_pairs_parquet(
-    n_bits: int = 64,
-    n_bands: int = 16,
-    seed: int = 42,
-    max_bucket: int = 100_000,
-    probes: int = 0,
-) -> str:
-    """Single-process replay of ``srp_candidates`` over the contract-sf
-    embeddings table, stored once as (id_a, id_b) parquet. Reuses the
-    pure kernels (``similarity.srp_planes`` / ``srp_signatures``) the
-    distributed pandas UDF applies; the bucket -> distinct-(id_a < id_b)
-    pair expansion (buckets above ``max_bucket`` dropped) is replayed in
-    plain Python. The oracle built on it therefore checks the
-    DISTRIBUTED plumbing — UDF batching, the band explode, the
-    JVM/salted bucket expansion, and the re-rank joins — against a
-    sequential run of the same seeded algorithm (the stored-truth
-    pattern of ``_image_embeddings_parquet``)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = (
-        f"/tmp/yadf_contract_srp_pairs_{_sf_slug()}_{n_bits}_{n_bands}_{seed}"
-        f"_{probes}.parquet"
-    )
-    if not os.path.exists(path):
-        t = pq.read_table(
-            f"{CONTRACT_SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        ids = t.column("vec_id").to_numpy().tolist()
-        mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        planes = similarity.srp_planes(n_bits, EMB_DIM, seed)
-        sigs = similarity.srp_signatures(mat, planes)
-        band_bits = n_bits // n_bands
-        mask = np.uint64((1 << band_bits) - 1)
-        # (band_idx, band_hash) -> member ids; base memberships plus the
-        # multi-probe keys from the SAME kernel the distributed UDF runs
-        buckets: dict[tuple[int, int], list[int]] = {}
-        for i in range(n_bands):
-            band = ((sigs >> np.uint64(i * band_bits)) & mask).tolist()
-            for vid, bh in zip(ids, band):
-                buckets.setdefault((i, int(bh)), []).append(vid)
-        if probes > 0:
-            for vid, keys in zip(ids, similarity.srp_probe_keys(mat, planes, n_bands, probes)):
-                for k in keys:
-                    buckets.setdefault((k >> band_bits, k & ((1 << band_bits) - 1)), []).append(vid)
-        pairs: set[tuple[int, int]] = set()
-        for members in buckets.values():
-            members = sorted(set(members))
-            if 1 < len(members) <= max_bucket:
-                for x in range(len(members)):
-                    for y in range(x + 1, len(members)):
-                        pairs.add((members[x], members[y]))
-        ordered = sorted(pairs)
-        table = pa.table(
-            {
-                "id_a": pa.array([a for a, _ in ordered], pa.int64()),
-                "id_b": pa.array([b for _, b in ordered], pa.int64()),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _ivf_truth_pairs_parquet(
-    n_centroids: int = 32, n_probe: int = 4, seed: int = 42, max_bucket: int = 100_000
-) -> str:
-    """Single-process replay of the IVF candidate generation (seeded
-    spherical k-means on the vec_id-ordered sample + n_probe cell
-    assignment + shared-cell pair expansion) over the contract-sf
-    embeddings table — same pure kernels
-    (``similarity.kmeans_cosine_centroids`` / ``probe_top_cells``) the
-    Spark path calls, so the oracle checks the distributed assignment /
-    bucket-join plumbing against a sequential run."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = f"/tmp/yadf_contract_ivf_pairs_{_sf_slug()}_{n_centroids}_{n_probe}_{seed}.parquet"
-    if not os.path.exists(path):
-        t = pq.read_table(
-            f"{CONTRACT_SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        ids = np.asarray(t.column("vec_id").to_numpy())
-        mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        # the Spark path trains on df.orderBy("vec_id").limit(20_000)
-        order = np.argsort(ids, kind="stable")
-        sample = mat[order][:20_000]
-        cents = similarity.kmeans_cosine_centroids(sample, n_centroids, 10, seed)
-        cells = similarity.probe_top_cells(mat, cents, n_probe)
-        buckets: dict[int, list[int]] = {}
-        for vid, row in zip(ids.tolist(), cells):
-            for c in row.tolist():
-                buckets.setdefault(c, []).append(vid)
-        pairs: set[tuple[int, int]] = set()
-        for members in buckets.values():
-            if 1 < len(members) <= max_bucket:
-                members.sort()
-                for x in range(len(members)):
-                    for y in range(x + 1, len(members)):
-                        pairs.add((members[x], members[y]))
-        ordered = sorted(pairs)
-        table = pa.table(
-            {
-                "id_a": pa.array([a for a, _ in ordered], pa.int64()),
-                "id_b": pa.array([b for _, b in ordered], pa.int64()),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _emb_gate_truth_pairs_parquet(
-    n_bits: int = 64, n_bands: int = 16, seed: int = 42, max_bucket: int = 100_000
-) -> str:
-    """Single-process replay of ``embedding_candidates_between`` for the
-    contract's batch/history split (vec_id % 5 == 0 vs the rest): both
-    sides banded by the same seeded SRP kernels, pairs from buckets
-    populated on both sides (each side <= ``max_bucket``), stored as
-    (id_a, id_b) parquet. The oracle re-derives the cosine verify and
-    the anti-join relationally over it — the distributed two-sided
-    bucket machinery is what gets checked."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = (
-        f"/tmp/yadf_contract_embgate_pairs_{_sf_slug()}_{n_bits}_{n_bands}_{seed}.parquet"
-    )
-    if not os.path.exists(path):
-        t = pq.read_table(
-            f"{CONTRACT_SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        ids = np.asarray(t.column("vec_id").to_numpy())
-        mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        planes = similarity.srp_planes(n_bits, EMB_DIM, seed)
-        sigs = similarity.srp_signatures(mat, planes)
-        band_bits = n_bits // n_bands
-        mask = np.uint64((1 << band_bits) - 1)
-        is_batch = (ids % 5 == 0).tolist()
-        buckets: dict[tuple[int, int], tuple[list[int], list[int]]] = {}
-        for i in range(n_bands):
-            band = ((sigs >> np.uint64(i * band_bits)) & mask).tolist()
-            for vid, bh, ib in zip(ids.tolist(), band, is_batch):
-                a, b = buckets.setdefault((i, int(bh)), ([], []))
-                (a if ib else b).append(vid)
-        pairs: set[tuple[int, int]] = set()
-        for a, b in buckets.values():
-            if a and b and len(a) <= max_bucket and len(b) <= max_bucket:
-                for x in a:
-                    for y in b:
-                        pairs.add((x, y))
-        ordered = sorted(pairs)
-        table = pa.table(
-            {
-                "id_a": pa.array([p[0] for p in ordered], pa.int64()),
-                "id_b": pa.array([p[1] for p in ordered], pa.int64()),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def q_embedding_ingest_gate(spark, sf_dir):
-    """Cross-corpus EMBEDDING ingest gate (the vector sibling of the
-    text near_dup_anti_join and the image near_dup_gate): the batch
-    slice (vec_id % 5 == 0) is deduped against the history (the rest)
-    by SRP band join — the history is never self-joined — with exact
-    cosine verify; survivors are the batch rows with no history
-    near-dup at cosine >= 0.45. Oracle: stored-truth replay of the
-    two-sided band/bucket kernels, cosine + anti-join re-derived
-    relationally in DuckDB."""
-    e = _t(spark, sf_dir, "embeddings")
-    batch = e.where(F.col("vec_id") % 5 == 0)
-    history = e.where(F.col("vec_id") % 5 != 0)
-    out = similarity.embedding_near_dup_anti_join(
-        batch, history, EMB_DIM, min_cosine=0.45, n_bands=16
-    )
-    return out.select("vec_id", "label").orderBy("vec_id")
-
-
-def _pq_truth_codebooks_parquet(m: int = 8, k: int = 16, seed: int = 42) -> str:
-    """Single-process replay of the PQ codebook training (seeded
-    per-subspace Lloyd on the vec_id-ordered sample — the same pure
-    ``similarity.pq_lloyd`` kernel the Spark query's driver-side
-    training calls), stored as (sub, code, centroid) parquet. The
-    oracles built on it re-derive the per-vector argmin CODES and the
-    query ADC distances relationally in DuckDB, so the distributed
-    encode (pandas-UDF batching) and the codes-only ADC scan are
-    checked against independent arithmetic, with only the (driver-side
-    anyway) training output shared."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = f"/tmp/yadf_contract_pq_books_{_sf_slug()}_{m}_{k}_{seed}.parquet"
-    if not os.path.exists(path):
-        t = pq.read_table(
-            f"{CONTRACT_SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        ids = np.asarray(t.column("vec_id").to_numpy())
-        mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        order = np.argsort(ids, kind="stable")
-        sample = mat[order][:20_000]
-        books = similarity.pq_lloyd(sample, m, k, 10, seed)
-        subs, codes, cents = [], [], []
-        for s in range(books.shape[0]):
-            for c in range(books.shape[1]):
-                subs.append(s)
-                codes.append(c)
-                cents.append(books[s, c].tolist())
-        table = pa.table(
-            {
-                "sub": pa.array(subs, pa.int32()),
-                "code": pa.array(codes, pa.int32()),
-                "centroid": pa.array(cents, pa.list_(pa.float64())),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _ivf_truth_centroids_parquet(n_centroids: int = 32, seed: int = 42) -> str:
-    """The IVF coarse centroids as stored truth (cell, centroid) —
-    the same seeded spherical-k-means kernel on the same vec_id-ordered
-    sample as `_ivf_truth_pairs_parquet`, but materialized so a DuckDB
-    oracle can re-derive cell ASSIGNMENTS and probe sets relationally
-    (argmax similarity per vector) instead of replaying pair sets."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = f"/tmp/yadf_contract_ivf_cents_{_sf_slug()}_{n_centroids}_{seed}.parquet"
-    if not os.path.exists(path):
-        t = pq.read_table(
-            f"{CONTRACT_SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        ids = np.asarray(t.column("vec_id").to_numpy())
-        mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        order = np.argsort(ids, kind="stable")
-        sample = mat[order][:20_000]
-        cents = similarity.kmeans_cosine_centroids(sample, n_centroids, 10, seed)
-        table = pa.table(
-            {
-                "cell": pa.array(range(len(cents)), pa.int32()),
-                "centroid": pa.array([c.tolist() for c in cents], pa.list_(pa.float64())),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def q_ivf_pq_topk(spark, sf_dir):
-    """IVF-PQ top-5 (the FAISS IVFPQ layout): queries vec_id < 8 probe
-    their 8 nearest of 32 coarse cells and ADC-score only the corpus
-    rows assigned there — candidate selection is a BroadcastHashJoin
-    on the cell column over the one-scan (id, cell, code) index frame;
-    the embedding column is read exactly once. Oracle: DuckDB
-    re-derives cell assignments, probe sets, argmin codes, and the ADC
-    sums from the stored-truth centroids + codebooks."""
-    e = _t(spark, sf_dir, "embeddings").orderBy("vec_id")
-    cents = similarity.train_ivf_centroids(e, EMB_DIM, n_centroids=32)
-    books = similarity.pq_train_codebooks(e, EMB_DIM, m=8, k=16)
-    return similarity.ivf_pq_topk(
-        e, e.filter("vec_id < 8"), cents, books, k=5, n_probe=8
-    ).orderBy("query_id", "rank")
-
-
-def q_pq_codes(spark, sf_dir):
-    """Product-quantization encode (Jégou et al. 2011): each 64-dim
-    embedding compressed to 8 codeword indices — the memory-scale ANN
-    path (8-32× working-set cut here; 100-400× at production dims).
-    Training is driver-side on the vec_id-ordered sample (the IVF
-    posture); the encode is a zero-shuffle Arrow-batched narrow map.
-    Oracle: DuckDB re-derives every argmin code from the embeddings
-    view and the stored-truth codebooks via list_distance — the
-    distributed batching is checked against independent arithmetic.
-    The 8-int code array is emitted dash-joined as a string: the
-    driver's canonicalizer pandas-sorts output columns and cannot hash
-    array cells (the one red row of CORRECTNESS_r04 was exactly this
-    shape, values verified correct)."""
-    e = _t(spark, sf_dir, "embeddings").orderBy("vec_id")
-    books = similarity.pq_train_codebooks(e, EMB_DIM, m=8, k=16)
-    out = similarity.pq_encode(e, books)
-    return out.select(
-        F.col("id").alias("vec_id"),
-        F.array_join(F.col("code").cast("array<string>"), "-").alias("code"),
-    ).orderBy("vec_id")
-
-
-def q_pq_topk(spark, sf_dir):
-    """PQ asymmetric-distance top-5 for query vectors vec_id < 8: the
-    corpus scan reads the 8-int code column ONLY (embeddings never
-    shuffle); per-query ADC tables broadcast in the kernel closure;
-    selection is the shared two-phase top-k. Oracle: DuckDB rebuilds
-    codes AND the ADC sums from the stored-truth codebooks, ranked with
-    the ann_topk rounding/tie-break contract."""
-    e = _t(spark, sf_dir, "embeddings").orderBy("vec_id")
-    books = similarity.pq_train_codebooks(e, EMB_DIM, m=8, k=16)
-    return similarity.pq_topk(e, e.filter("vec_id < 8"), books, k=5).orderBy(
-        "query_id", "rank"
-    )
-
-
-def q_ann_topk_srp(spark, sf_dir):
-    """SRP-LSH approximate top-3 neighbors (bucketed ANN scale path).
-    Oracle-checked: the distributed signature/band/bucket/re-rank plan
-    must reproduce a single-process replay of the same seeded kernels
-    (``_srp_truth_pairs_parquet``), ranked by DuckDB with the ann_topk
-    rounding/tie-break contract."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.ann_topk_srp(e, dim=EMB_DIM, k=3, n_bands=16).orderBy(
-        "query_id", "rank"
-    )
-
-
-def q_ann_topk_srp_multiprobe(spark, sf_dir):
-    """Multi-probe SRP ANN (Lv et al. 2007): same 16 bands, but each
-    vector also probes the 8 buckets reached by flipping its
-    lowest-margin bits — recall that would otherwise cost extra band
-    tables (a whole extra membership shuffle each) for +8 rows per
-    record in the same shuffle. Oracle: stored-truth replay of the
-    identical seeded kernel (probes included), re-ranked by DuckDB."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.ann_topk_srp(e, dim=EMB_DIM, k=3, n_bands=16, probes=8).orderBy(
-        "query_id", "rank"
-    )
-
-
-def q_ann_recall_report(spark, sf_dir):
-    """ANN quality dashboard: recall@3 of each SRP configuration against
-    the exact brute-force top-3 ground truth — the measured basis for
-    choosing bands/probes at a new corpus instead of guessing (the
-    multi-probe scale argument is only real if the recall it buys is
-    observed). One brute-force pass (two-phase partial top-k, reused by
-    every variant via localCheckpoint) + one semi-join and count per
-    variant; output is one row per config. Oracle: the stored-truth SRP
-    candidate replays re-ranked in DuckDB against its own all-pairs
-    top-3."""
-    e = _t(spark, sf_dir, "embeddings")
-    truth = (
-        similarity.brute_force_topk(e, e, k=3)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # three consumers: total + 2 variants
-    )
-    tot = truth.agg(F.count("*").alias("total"))
-
-    def hits_of(name: str, approx):
-        return (
-            truth.join(
-                approx.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_semi",
-            )
-            .agg(F.count("*").alias("hits"))
-            .select(F.lit(name).alias("method"), "hits")
-        )
-
-    def srp(name: str, **kw):
-        return hits_of(name, similarity.ann_topk_srp(e, dim=EMB_DIM, k=3, n_bands=16, **kw))
-
-    eo = e.orderBy("vec_id")  # the IVF trainer's sample-order contract
-    ivf_top = similarity.topk_from_candidates(
-        e,
-        similarity.ivf_candidates(
-            eo, EMB_DIM, n_centroids=32, n_probe=4,
-            centroids=similarity.train_ivf_centroids(eo, EMB_DIM, n_centroids=32),
-        ),
-        k=3,
-        dim=EMB_DIM,
-    )
-    rep = (
-        srp("srp_16b")
-        .unionByName(srp("srp_16b_probe8", probes=8))
-        .unionByName(hits_of("ivf_32c_probe4", ivf_top))
-    )
-    return (
-        rep.crossJoin(tot)
-        .withColumn("recall_at_k", F.round(F.col("hits") / F.col("total"), 6))
-        .orderBy("method")
-    )
-
-
-def _srp_topk_sql(name: str, path: str) -> str:
-    """CTE fragment: re-rank a stored-truth SRP candidate parquet to
-    per-query top-3 — the ann_topk_srp oracle pattern, parameterized so
-    the recall report composes one per variant."""
-    return f"""
-            p_{name} AS (SELECT id_a, id_b FROM read_parquet('{path}')),
-            sym_{name} AS (SELECT id_a AS query_id, id_b AS neighbor_id FROM p_{name}
-                           UNION ALL
-                           SELECT id_b AS query_id, id_a AS neighbor_id FROM p_{name}),
-            s_{name} AS (SELECT sym_{name}.query_id, sym_{name}.neighbor_id,
-                         round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                CAST(c.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                      CAST(q.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                                      CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-                  FROM sym_{name} JOIN embeddings q ON q.vec_id = sym_{name}.query_id
-                           JOIN embeddings c ON c.vec_id = sym_{name}.neighbor_id),
-            r_{name} AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rank FROM s_{name}),
-            top_{name} AS (SELECT query_id, neighbor_id FROM r_{name} WHERE rank <= 3),
-            h_{name} AS (SELECT count(*) AS hits
-                         FROM truth JOIN top_{name} USING (query_id, neighbor_id))"""
+    p = f"{CONTRACT_SF_DIR}/documents.parquet"
+    try:
+        st = os.stat(p)
+        stat = (p, st.st_mtime_ns, st.st_size)
+    except FileNotFoundError:
+        stat = (p, 0, 0)
+    return f"{base}-{_sf_content_fingerprint((stat,))}"
 
 
 def _images_parquet(n: int, seed: int = 42) -> str:
@@ -2118,39 +1541,6 @@ def _videos_parquet(n_videos: int = 8, n_frames: int = 12) -> str:
                 "bytes": pa.array(payloads, pa.binary()),
                 "n_frames": pa.array(counts, pa.int32()),
                 "frame_lens": pa.array(lens, pa.list_(pa.int64())),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _image_embeddings_parquet(n: int, dim: int = 64, seed: int = 42) -> str:
-    """Ground-truth embeddings for the first ``n`` fixture images,
-    computed single-process with the same pure kernel
-    (``multimodal.embed_pixels``) the distributed pandas UDF applies —
-    stored as float64 holding exactly the float32-quantized values, so
-    Spark's ``array<float>`` -> double cast and DuckDB's DOUBLE[] see
-    bit-identical inputs and the cosine/rank replay is exact."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from yadf_spark.fixtures import images as img
-    from yadf_spark.fixtures.codec import decode_image
-    from yadf_spark.operators import multimodal as mm
-
-    path = f"/tmp/yadf_contract_image_embs_{n}_{dim}_{seed}.parquet"
-    if not os.path.exists(path):
-        pdf = img.images_pdf(n, seed=seed)
-        embs = [
-            mm.embed_pixels(decode_image(bytes(p)), dim).astype("float64").tolist()
-            for p in pdf["bytes"]
-        ]
-        table = pa.table(
-            {
-                "image_id": pa.array(list(pdf["image_id"]), pa.string()),
-                "embedding": pa.array(embs, pa.list_(pa.float64())),
             }
         )
         tmp = f"{path}.tmp-{os.getpid()}"
@@ -2273,20 +1663,6 @@ def q_images_format_audit(spark, sf_dir):
 
     df = spark.read.parquet(_images_mislabelled_parquet(256))
     return mm.format_audit(df).orderBy("image_id")
-
-
-def q_ivf_near_dup(spark, sf_dir):
-    """IVF-bucketed embedding near-dup pairs (coarse k-means cells +
-    salted self-join + exact cosine verify — the ANN scale path beside
-    SRP-LSH). Oracle-checked: the distributed train/assign/bucket-join
-    plan must reproduce a single-process replay of the same seeded
-    k-means + probe kernels (``_ivf_truth_pairs_parquet``), with DuckDB
-    re-deriving the cosine filter over the same embeddings."""
-    e = _t(spark, sf_dir, "embeddings").orderBy("vec_id")
-    cents = similarity.train_ivf_centroids(e, EMB_DIM, n_centroids=32)
-    return similarity.ivf_near_dup_pairs(
-        e, EMB_DIM, 0.45, n_probe=4, centroids=cents
-    ).orderBy("id_a", "id_b")
 
 
 def q_images_metadata(spark, sf_dir):
@@ -2429,22 +1805,6 @@ def q_images_resize(spark, sf_dir):
         .select("image_id", F.length("bytes").cast("long").alias("resized_len"))
         .orderBy("image_id")
     )
-
-
-def q_images_embedding_ann(spark, sf_dir):
-    """Decode -> histogram embedding -> brute-force cosine top-3 over the
-    image table (the multimodal ANN composition). Oracle-checked: the
-    distributed decode+embed (mapInPandas) and two-phase top-k must
-    reproduce a single-process replay of the same pure kernel
-    (``_image_embeddings_parquet``) ranked by DuckDB — both engines
-    round cosine to 6 dp and tie-break on neighbor_id, as in ann_topk."""
-    from yadf_spark.operators import multimodal as mm
-
-    df = spark.read.parquet(_images_parquet(96))
-    emb = mm.image_embedding(df, dim=64).withColumnRenamed("image_id", "vec_id")
-    return similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") <= "img-000000007"), k=3
-    ).orderBy("query_id", "rank")
 
 
 def _neardup_videos_parquet(n_bases: int = 12, n_frames: int = 4) -> str:
@@ -2629,8 +1989,8 @@ def _audios_parquet(n_clips: int = 48) -> str:
     parameters it chose (rate/channels/length) plus the signal features
     computed single-process by the SAME pure kernel
     (``audio.audio_feature_values``) the distributed mapInPandas path
-    applies — the stored-truth pattern of images_metadata /
-    images_embedding_ann, extended to the audio modality."""
+    applies — the stored-truth pattern of images_metadata, extended to
+    the audio modality."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -3464,23 +2824,22 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ROTATION PLAN (the driver's correctness sweep checks the FIRST 50
-    # entries only; 135 exist, so coverage rotates round-by-round):
-    #   - Rounds 1-3 gave green driver rows to 66 queries; round 4's
-    #     window covered 50 of the 79 never-checked (49 green; pq_codes
-    #     red on output SHAPE only — array<int> crashed the driver's
-    #     canonicalizer; values judge-verified correct).
-    #   - Round 5 window (entries 1-50 below): the 28 never-checked
+    # entries only; 118 exist, so coverage rotates round-by-round):
+    #   - Rounds 1-4 gave green correctness rows to 92 of the queries that
+    #     remain; the other embedding/ANN queries (pq_codes among them,
+    #     round 4's one red row) left with operators/similarity.py.
+    #   - Round 5 window (entries 1-50 below): the 26 never-checked
     #     queries (curation/mix/dsir/vocab/tfidf/denylist/fuzzy-
     #     decontam, URL/C4, spans, round-4's cluster_quality_docs /
     #     bpe_encode_docs, and round-5's new cluster_quality_ext_docs),
-    #     then pq_codes re-checked with its output reshaped to a
-    #     dash-joined string, then 18 durability re-confirmations drawn
-    #     from the OLDEST (round-1) greens in their original order, then
-    #     the first three round-4 greens. After this round every
-    #     contract query has at least one green driver row.
+    #     then 18 durability re-confirmations drawn from the OLDEST
+    #     (round-1) greens in their original order, then the first six
+    #     round-4 greens. After this round every contract query has at
+    #     least one green correctness row.
     #   - denylist_hits_docs enters the window with its matched_terms
-    #     array comma-joined — the same canonicalizer trap pq_codes hit,
-    #     fixed BEFORE first driver contact (VERDICT r4 item 2).
+    #     array comma-joined: the sweep's canonicalizer crashes on
+    #     array columns, so it was fixed BEFORE its first sweep
+    #     (VERDICT r4 item 2).
     #   - The remaining previously-green queries sit at the back in
     #     their original relative order.
     return {
@@ -3508,14 +2867,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_weights_docs": q_dsir_weights_docs,
         "dsir_resample_docs": q_dsir_resample_docs,
         "json_props_stats": q_json_props_stats,
-        "label_centroids": q_label_centroids,
-        "embedding_outliers": q_embedding_outliers,
         "cluster_quality_docs": q_cluster_quality_docs,
         "bpe_encode_docs": q_bpe_encode_docs,
         # round-5 addition: element/entropy clustering report
         "cluster_quality_ext_docs": q_cluster_quality_ext_docs,
-        # -- pq_codes re-check: r4's one red row, output now reshaped -----
-        "pq_codes": q_pq_codes,
         # -- 18 durability re-confirmations (oldest greens, round 1) ------
         "size_groups": q_size_groups,
         "rfactor_under": q_rfactor_under,
@@ -3536,19 +2891,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup_docs": q_exact_dedup_docs,
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
         # -- round-4 window (all green r04), original order; the first ---
-        # -- three entries close the round-5 window -----------------------
-        "ann_topk_srp": q_ann_topk_srp,
-        "ivf_near_dup": q_ivf_near_dup,
+        # -- six entries close the round-5 window -------------------------
         "images_exact_dedup": q_images_exact_dedup,
         "images_near_dup_clusters": q_images_near_dup_clusters,
         "images_metadata": q_images_metadata,
         "images_resize": q_images_resize,
-        "images_embedding_ann": q_images_embedding_ann,
-        "ivf_pq_topk": q_ivf_pq_topk,
-        "pq_topk": q_pq_topk,
-        "ann_recall_report": q_ann_recall_report,
-        "ann_topk_srp_multiprobe": q_ann_topk_srp_multiprobe,
-        "embedding_ingest_gate": q_embedding_ingest_gate,
         "images_aspect_buckets": q_images_aspect_buckets,
         "images_format_audit": q_images_format_audit,
         "images_quality_filter": q_images_quality_filter,
@@ -3569,10 +2916,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_clicks_last_error": q_asof_clicks_last_error,
         "sessionized_events": q_sessionized_events,
         "clicks_within_error_window": q_clicks_within_error_window,
-        "kmeans_assign": q_kmeans_assign,
-        "kmeans_clusters": q_kmeans_clusters,
-        "cluster_prune_keep": q_cluster_prune_keep,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
         "winnow_clusters_docs": q_winnow_clusters_docs,
         "cc_components": q_cc_components,
         "near_dup_clusters_docs": q_near_dup_clusters_docs,
@@ -3588,8 +2931,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "normalized_dedup_docs": q_normalized_dedup_docs,
         "edit_near_dup_pairs": q_edit_near_dup_pairs,
         "ann_topk": q_ann_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "semantic_dedup": q_semantic_dedup,
         "token_stats": q_token_stats,
         "token_histogram": q_token_histogram,
         "char_class_stats": q_char_class_stats,
@@ -3763,32 +3104,6 @@ def oracle_sql() -> dict[str, str]:
                               ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM s)
             SELECT query_id, neighbor_id, cosine, rank FROM r
             WHERE rank <= 5 ORDER BY query_id, rank""",
-        "embedding_near_dup": """
-            WITH c AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-                      (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-                       sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6) AS cosine
-                FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id)
-            SELECT id_a, id_b, cosine FROM c WHERE cosine >= 0.45 ORDER BY id_a, id_b""",
-        "semantic_dedup": f"""
-            WITH v0 AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-              UNION ALL
-              SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[])
-              FROM embeddings WHERE vec_id % 17 = 0),
-            c AS (SELECT vec_id, v,
-                         {_semdedup_cell_sql(0)} AS c0, {_semdedup_cell_sql(1)} AS c1,
-                         {_semdedup_cell_sql(2)} AS c2, {_semdedup_cell_sql(3)} AS c3
-                  FROM v0),
-            drp AS (
-              SELECT DISTINCT b.vec_id FROM c a JOIN c b
-              ON a.vec_id < b.vec_id
-                 AND (a.c0 = b.c0 OR a.c1 = b.c1 OR a.c2 = b.c2 OR a.c3 = b.c3)
-              WHERE round(list_dot_product(a.v, b.v) /
-                          (sqrt(list_dot_product(a.v, a.v)) *
-                           sqrt(list_dot_product(b.v, b.v))), 6) >= 0.8)
-            SELECT vec_id, vec_id NOT IN (SELECT vec_id FROM drp) AS kept
-            FROM c ORDER BY vec_id""",
         "token_stats": """
             SELECT doc_id,
                    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
@@ -4147,7 +3462,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT query_id, neighbor_id, rrf_score, rank FROM rk
             WHERE rank <= 5 ORDER BY query_id, rank""",
         # BPE training: stored-truth replay of the identical greedy
-        # kernel (the seeded-ANN pattern) — "left"/"right" quoted, they
+        # kernel — "left"/"right" quoted, they
         # are SQL keywords
         "bpe_merges_docs": f"""
             SELECT rank, "left", "right", freq
@@ -4521,30 +3836,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE d.doc_id NOT IN (SELECT doc_id FROM tok
                                    WHERE token IN ({_deny_in_list()}))
             ORDER BY d.doc_id""",
-        "kmeans_assign": _kmeans_cte() + """
-            SELECT vec_id, CAST(cluster AS INT) AS cluster, cos AS cosine
-            FROM a2 WHERE rk = 1 ORDER BY vec_id""",
-        "kmeans_clusters": _kmeans_cte() + """
-            SELECT CAST(cluster AS INT) AS cluster, count(*) AS n,
-                   round(avg(cos), 6) AS mean_cosine
-            FROM a2 WHERE rk = 1 GROUP BY 1 ORDER BY 1""",
-        "cluster_prune_keep": _kmeans_cte() + """
-            , asg AS (SELECT vec_id, cluster, cos FROM a2 WHERE rk = 1),
-            thr AS (SELECT cluster, quantile_cont(cos, 0.7) AS thr
-                    FROM asg GROUP BY 1)
-            SELECT asg.vec_id, CAST(asg.cluster AS INT) AS cluster,
-                   asg.cos AS cosine, round(thr.thr, 6) AS thr
-            FROM asg JOIN thr USING (cluster)
-            WHERE asg.cos <= thr.thr ORDER BY asg.vec_id""",
-        "cluster_balanced_sample": _kmeans_cte() + """
-            , asg AS (SELECT vec_id, cluster FROM a2 WHERE rk = 1),
-            rn AS (SELECT vec_id, cluster,
-                          row_number() OVER (PARTITION BY cluster
-                              ORDER BY md5(CAST(vec_id AS VARCHAR) || ':kbal'),
-                                       vec_id) AS rn
-                   FROM asg)
-            SELECT vec_id, CAST(cluster AS INT) AS cluster
-            FROM rn WHERE rn <= 40 ORDER BY vec_id""",
         "fuzzy_decontaminate_docs": """
             WITH ctoks AS (SELECT doc_id,
                                   regexp_split_to_array(trim(text), '\\s+') AS w
@@ -4699,31 +3990,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(k) AS BIGINT) AS sum_k,
                    min(k) AS min_k, max(k) AS max_k
             FROM k GROUP BY 1 ORDER BY 1""",
-        "label_centroids": """
-            SELECT label, CAST(i - 1 AS INT) AS pos,
-                   round(sum(CAST(embedding[i] AS DOUBLE))
-                         / count(*), 6) AS mean_x,
-                   count(*) AS n
-            FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(i)
-            GROUP BY 1, 2 ORDER BY 1, 2""",
-        # same centroid arithmetic as label_centroids, then cosine of
-        # each row against its own label's centroid; outliers below the
-        # threshold are the mislabeled-pair suspects.
-        "embedding_outliers": """
-            WITH c0 AS (
-              SELECT label, i,
-                     round(sum(CAST(embedding[i] AS DOUBLE)) / count(*), 6) AS m
-              FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)
-              GROUP BY 1, 2),
-            cent AS (SELECT label, list(m ORDER BY i) AS c FROM c0 GROUP BY 1),
-            s AS (SELECT e.vec_id, e.label,
-                         round(list_dot_product(CAST(e.embedding AS DOUBLE[]), c.c) /
-                               (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                                      CAST(e.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(c.c, c.c))), 6) AS cosine
-                  FROM embeddings e JOIN cent c USING (label))
-            SELECT vec_id, label, cosine FROM s
-            WHERE cosine < -0.05 ORDER BY vec_id""",
         "source_name_pairs": """
             WITH s AS (SELECT DISTINCT source FROM documents)
             SELECT a.source AS src_a, b.source AS src_b,
@@ -5270,227 +4536,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(bit_count(xor(thash, phash)) AS INT) AS hamming
             FROM cand WHERE bit_count(xor(thash, phash)) <= 6
             ORDER BY id_big, id_crop, tile_idx""",
-        # distributed decode+embed+top-k vs a single-process replay of
-        # the same pure kernel (multimodal.embed_pixels), ranked by
-        # DuckDB — same rounding/tie-break contract as ann_topk.
-        "images_embedding_ann": f"""
-            WITH q AS (SELECT image_id AS query_id, embedding AS e
-                       FROM read_parquet('{_image_embeddings_parquet(96)}')
-                       WHERE image_id <= 'img-000000007'),
-            s AS (SELECT q.query_id, c.image_id AS neighbor_id,
-                         round(list_dot_product(q.e, c.embedding) /
-                               (sqrt(list_dot_product(q.e, q.e)) *
-                                sqrt(list_dot_product(c.embedding, c.embedding))), 6) AS cosine
-                  FROM q, read_parquet('{_image_embeddings_parquet(96)}') c
-                  WHERE c.image_id != q.query_id),
-            r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM s)
-            SELECT query_id, neighbor_id, cosine, rank FROM r
-            WHERE rank <= 3 ORDER BY query_id, rank""",
-        # seeded-ANN replays: the candidate SET comes from a
-        # single-process run of the same seeded kernels (stored-truth
-        # parquet); cosine/rank re-derived by DuckDB over the registered
-        # embeddings view with the ann_topk rounding/tie-break contract.
-        "ann_topk_srp": f"""
-            WITH p AS (SELECT id_a, id_b
-                       FROM read_parquet('{_srp_truth_pairs_parquet()}')),
-            sym AS (SELECT id_a AS query_id, id_b AS neighbor_id FROM p
-                    UNION ALL
-                    SELECT id_b AS query_id, id_a AS neighbor_id FROM p),
-            s AS (SELECT sym.query_id, sym.neighbor_id,
-                         round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                CAST(c.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                      CAST(q.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                                      CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-                  FROM sym JOIN embeddings q ON q.vec_id = sym.query_id
-                           JOIN embeddings c ON c.vec_id = sym.neighbor_id),
-            r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM s)
-            SELECT query_id, neighbor_id, cosine, rank FROM r
-            WHERE rank <= 3 ORDER BY query_id, rank""",
-        "ann_topk_srp_multiprobe": f"""
-            WITH p AS (SELECT id_a, id_b
-                       FROM read_parquet('{_srp_truth_pairs_parquet(probes=8)}')),
-            sym AS (SELECT id_a AS query_id, id_b AS neighbor_id FROM p
-                    UNION ALL
-                    SELECT id_b AS query_id, id_a AS neighbor_id FROM p),
-            s AS (SELECT sym.query_id, sym.neighbor_id,
-                         round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                CAST(c.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                                      CAST(q.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                                      CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-                  FROM sym JOIN embeddings q ON q.vec_id = sym.query_id
-                           JOIN embeddings c ON c.vec_id = sym.neighbor_id),
-            r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM s)
-            SELECT query_id, neighbor_id, cosine, rank FROM r
-            WHERE rank <= 3 ORDER BY query_id, rank""",
-        # recall@3 of each SRP variant vs the all-pairs brute-force
-        # top-3: the stored-truth candidate replays (base + probes=8)
-        # re-ranked by the same rounded-cosine contract, semi-joined
-        # against the exact truth, rolled to one row per variant
-        "ann_recall_report": f"""
-            WITH tq AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                         round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                CAST(b.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                      CAST(a.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                                      CAST(b.embedding AS DOUBLE[])))), 6) AS cosine
-                  FROM embeddings a, embeddings b WHERE a.vec_id != b.vec_id),
-            tr AS (SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rank FROM tq),
-            truth AS (SELECT query_id, neighbor_id FROM tr WHERE rank <= 3),
-            tot AS (SELECT count(*) AS total FROM truth),
-            {_srp_topk_sql("base", _srp_truth_pairs_parquet())},
-            {_srp_topk_sql("mp", _srp_truth_pairs_parquet(probes=8))},
-            {_srp_topk_sql("ivf", _ivf_truth_pairs_parquet())}
-            SELECT 'srp_16b' AS method, h_base.hits, tot.total,
-                   round(h_base.hits * 1.0 / tot.total, 6) AS recall_at_k
-            FROM h_base, tot
-            UNION ALL
-            SELECT 'srp_16b_probe8', h_mp.hits, tot.total,
-                   round(h_mp.hits * 1.0 / tot.total, 6)
-            FROM h_mp, tot
-            UNION ALL
-            SELECT 'ivf_32c_probe4', h_ivf.hits, tot.total,
-                   round(h_ivf.hits * 1.0 / tot.total, 6)
-            FROM h_ivf, tot
-            ORDER BY method""",
-        "ivf_near_dup": f"""
-            WITH p AS (SELECT id_a, id_b
-                       FROM read_parquet('{_ivf_truth_pairs_parquet()}')),
-            c AS (SELECT p.id_a, p.id_b,
-                         round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                CAST(b.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                      CAST(a.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                                      CAST(b.embedding AS DOUBLE[])))), 6) AS cosine
-                  FROM p JOIN embeddings a ON a.vec_id = p.id_a
-                         JOIN embeddings b ON b.vec_id = p.id_b)
-            SELECT id_a, id_b, cosine FROM c WHERE cosine >= 0.45
-            ORDER BY id_a, id_b""",
-        # embedding ingest gate: candidates from the two-sided band
-        # replay; cosine verify + self-pair guard + anti-join replayed
-        # relationally
-        "embedding_ingest_gate": f"""
-            WITH p AS (SELECT id_a, id_b
-                       FROM read_parquet('{_emb_gate_truth_pairs_parquet()}')),
-            c AS (SELECT p.id_a, p.id_b,
-                         round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                CAST(b.embedding AS DOUBLE[])) /
-                               (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                                      CAST(a.embedding AS DOUBLE[]))) *
-                                sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                                      CAST(b.embedding AS DOUBLE[])))), 6)
-                           AS cosine
-                  FROM p JOIN embeddings a ON a.vec_id = p.id_a
-                         JOIN embeddings b ON b.vec_id = p.id_b
-                  WHERE p.id_a != p.id_b),
-            matched AS (SELECT DISTINCT id_a FROM c WHERE cosine >= 0.45)
-            SELECT vec_id, label FROM embeddings
-            WHERE vec_id % 5 = 0 AND vec_id NOT IN (SELECT id_a FROM matched)
-            ORDER BY vec_id""",
-        # IVF-PQ: cells, probe sets, codes, and ADC sums all re-derived
-        # relationally from the two stored-truth tables (centroids +
-        # codebooks) — the distributed index build and the broadcast
-        # cell-routing join are checked against independent arithmetic
-        "ivf_pq_topk": f"""
-            WITH cents AS (SELECT cell, centroid
-                           FROM read_parquet('{_ivf_truth_centroids_parquet()}')),
-            cb AS (SELECT sub, code, centroid
-                   FROM read_parquet('{_pq_truth_codebooks_parquet()}')),
-            e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-            sims AS (SELECT e.vec_id, cents.cell,
-                            list_dot_product(e.emb, cents.centroid) /
-                            greatest(sqrt(list_dot_product(e.emb, e.emb)), 1e-12) AS sim
-                     FROM e CROSS JOIN cents),
-            ranked AS (SELECT vec_id, cell,
-                              row_number() OVER (PARTITION BY vec_id
-                                                 ORDER BY sim DESC, cell) AS rn
-                       FROM sims),
-            vcell AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-            probes AS (SELECT vec_id AS query_id, cell
-                       FROM ranked WHERE rn <= 8 AND vec_id < 8),
-            cd AS (SELECT e.vec_id, cb.sub, cb.code,
-                          list_distance(e.emb[cb.sub * 8 + 1 : cb.sub * 8 + 8],
-                                        cb.centroid) AS dist
-                   FROM e CROSS JOIN cb),
-            cr AS (SELECT vec_id, sub, code,
-                          row_number() OVER (PARTITION BY vec_id, sub
-                                             ORDER BY dist, code) AS rn
-                   FROM cd),
-            codes AS (SELECT vec_id, sub, code FROM cr WHERE rn = 1),
-            adc AS (SELECT p.query_id, v.vec_id AS neighbor_id,
-                           round(sum(power(list_distance(
-                             q.emb[c.sub * 8 + 1 : c.sub * 8 + 8], cb.centroid), 2)), 6)
-                             AS adist
-                    FROM probes p
-                    JOIN vcell v ON v.cell = p.cell AND v.vec_id != p.query_id
-                    JOIN codes c ON c.vec_id = v.vec_id
-                    JOIN cb ON cb.sub = c.sub AND cb.code = c.code
-                    JOIN e q ON q.vec_id = p.query_id
-                    GROUP BY p.query_id, v.vec_id),
-            rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY adist, neighbor_id) AS INT) AS rank FROM adc)
-            SELECT query_id, neighbor_id, adist, rank FROM rk
-            WHERE rank <= 5 ORDER BY query_id, rank""",
-        # PQ: DuckDB re-derives every argmin code from the embeddings
-        # view + stored-truth codebooks (list_distance is monotone in
-        # the squared distance the kernel argmins; ties break on code,
-        # numpy first-index semantics)
-        "pq_codes": f"""
-            WITH cb AS (SELECT sub, code, centroid
-                        FROM read_parquet('{_pq_truth_codebooks_parquet()}')),
-            e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-            d AS (SELECT e.vec_id, cb.sub, cb.code,
-                         list_distance(e.emb[cb.sub * 8 + 1 : cb.sub * 8 + 8],
-                                       cb.centroid) AS dist
-                  FROM e CROSS JOIN cb),
-            r AS (SELECT vec_id, sub, code,
-                         row_number() OVER (PARTITION BY vec_id, sub
-                                            ORDER BY dist, code) AS rn
-                  FROM d)
-            SELECT vec_id,
-                   string_agg(CAST(code AS VARCHAR), '-' ORDER BY sub) AS code
-            FROM r WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""",
-        # PQ ADC: codes rebuilt as above, then each query's asymmetric
-        # distance = sum over subspaces of squared distance from the
-        # query subvector to the neighbor's codeword — the exact
-        # arithmetic the kernel's lookup table sums, ranked with the
-        # ann_topk rounding/tie-break contract
-        "pq_topk": f"""
-            WITH cb AS (SELECT sub, code, centroid
-                        FROM read_parquet('{_pq_truth_codebooks_parquet()}')),
-            e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-            d AS (SELECT e.vec_id, cb.sub, cb.code,
-                         list_distance(e.emb[cb.sub * 8 + 1 : cb.sub * 8 + 8],
-                                       cb.centroid) AS dist
-                  FROM e CROSS JOIN cb),
-            r AS (SELECT vec_id, sub, code,
-                         row_number() OVER (PARTITION BY vec_id, sub
-                                            ORDER BY dist, code) AS rn
-                  FROM d),
-            codes AS (SELECT vec_id, sub, code FROM r WHERE rn = 1),
-            q AS (SELECT vec_id AS query_id, emb FROM e WHERE vec_id < 8),
-            adc AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-                           round(sum(power(list_distance(
-                             q.emb[c.sub * 8 + 1 : c.sub * 8 + 8], cb.centroid), 2)), 6)
-                             AS adist
-                    FROM q CROSS JOIN codes c
-                    JOIN cb ON cb.sub = c.sub AND cb.code = c.code
-                    WHERE c.vec_id != q.query_id
-                    GROUP BY q.query_id, c.vec_id),
-            rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY adist, neighbor_id) AS INT) AS rank FROM adc)
-            SELECT query_id, neighbor_id, adist, rank FROM rk
-            WHERE rank <= 5 ORDER BY query_id, rank""",
         # the FLAGSHIP gate: the full 5-stage pipeline's cluster
         # assignment must equal the planted truth's transitive closure
         # (min-label components + singleton backfill) — cluster-level

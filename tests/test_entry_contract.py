@@ -31,11 +31,11 @@ def test_every_query_has_callable_and_oracle_keys_subset():
 
 def test_rotation_window_covers_never_driver_checked_queries():
     """The driver's correctness sweep checks only the FIRST 50 entries
-    of queries(); the round-5 rotation promises that window to (a)
-    every query with NO driver verdict in CORRECTNESS_r01-r04 and (b)
-    pq_codes, round 4's one red row (output shape, since reshaped).
-    Pin both against the committed records so an accidental reorder
-    can't silently leave a never-checked query outside the window."""
+    of queries(); the round-5 rotation promises that window to every
+    query with no GREEN verdict in CORRECTNESS_r01-r04, placed
+    first. Pin that against the committed records so an accidental
+    reorder can't silently leave a never-checked query outside the
+    window."""
     import json
     import os
 
@@ -56,8 +56,7 @@ def test_rotation_window_covers_never_driver_checked_queries():
     qs = list(entrymod.queries())
     window = qs[:50]
     # never GREEN, not merely never present: a red row that was never
-    # re-greened (pq_codes in r04) must stay inside the window until a
-    # green verdict exists
+    # re-greened must stay inside the window until a green verdict exists
     never_green = [k for k in qs if k not in greens]
     missed = [k for k in never_green if k not in window]
     assert not missed, (

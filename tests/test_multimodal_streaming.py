@@ -968,49 +968,3 @@ def test_band_index_rejects_mismatched_band_fn(spark, tmp_path):
         sd.incremental_near_dup_batch(b2, 1, index_dir, pairs_dir, band_fn=stale_fn)
     # same function keeps working
     sd.incremental_near_dup_batch(b2, 1, index_dir, pairs_dir, band_fn=mm.video_band_table)
-
-
-def test_streaming_embedding_near_dup_matches_batch_candidates(spark, tmp_path):
-    """Embeddings are the fourth modality through the SAME incremental
-    band index: an SRP band_fn over vector batches must reproduce the
-    batch path's candidate set regardless of micro-batch split."""
-    from yadf_spark.operators import minhash, similarity
-
-    rng = np.random.RandomState(77)
-    dim = 16
-    cents = rng.standard_normal((5, dim))
-    rows = []
-    for i in range(20):
-        v = cents[i % 5] + 0.01 * rng.standard_normal(dim)
-        rows.append((i, [float(x) for x in v.astype(np.float32)]))
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>").persist()
-    band_fn = similarity.make_embedding_band_fn(dim, n_bits=32, n_bands=8, seed=9)
-    b1 = vecs.filter(F.col("vec_id") < 10)
-    b2 = vecs.filter(F.col("vec_id") >= 10)
-
-    index_dir = str(tmp_path / "eidx")
-    pairs_dir = str(tmp_path / "epairs")
-    sd.incremental_near_dup_batch(b1, 0, index_dir, pairs_dir, band_fn=band_fn)
-    sd.incremental_near_dup_batch(b2, 1, index_dir, pairs_dir, band_fn=band_fn)
-
-    streamed = {
-        (r.id_a, r.id_b)
-        for r in spark.read.option("basePath", pairs_dir).parquet(pairs_dir + "/*").collect()
-    }
-    batch_pairs = {
-        (r.id_a, r.id_b)
-        for r in minhash.candidate_pairs_from_buckets(band_fn(vecs)).collect()
-    }
-    assert streamed == batch_pairs
-    assert len(batch_pairs) >= 10  # clusters must actually collide
-
-
-def test_embedding_band_fn_tag_versions_the_index(spark, tmp_path):
-    """Changing any bucket-membership knob must change the ownership
-    tag, so a reconfigured stream fails fast against an old index."""
-    from yadf_spark.operators import similarity
-
-    a = similarity.make_embedding_band_fn(16, n_bands=8, seed=9)
-    b = similarity.make_embedding_band_fn(16, n_bands=4, seed=9)
-    c = similarity.make_embedding_band_fn(16, n_bands=8, seed=10)
-    assert len({a.band_fn_tag, b.band_fn_tag, c.band_fn_tag}) == 3

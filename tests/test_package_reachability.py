@@ -6,7 +6,11 @@ imports, absolute and relative, and the parent packages each import
 runs. A module nothing reaches is code no CLI mode, pipeline or stream
 can execute; it fails this test instead of lingering. The allow-list
 names the few kept on purpose outside that graph, each with its
-callers."""
+callers.
+
+A second ``ast`` scan fails on imports a module never uses: a dead
+import keeps a dependency (and, for package modules, an import-graph
+edge) alive for code that no longer exists."""
 
 from __future__ import annotations
 
@@ -23,8 +27,6 @@ ALLOWED_UNREACHED = {
     "yadf_spark.fixtures.images",
     # the DuckDB contract harness: tests and the driver contract only
     "yadf_spark.testing",
-    # ANN / embedding operators: contract queries and their own tests
-    "yadf_spark.operators.similarity",
     # BM25 and rank fusion: contract queries and their own tests
     "yadf_spark.operators.retrieval",
     # as-of / interval joins, sessions, funnels: contract queries and tests
@@ -89,3 +91,41 @@ def test_every_package_module_is_reached_from_an_entry_point():
     stale = sorted(ALLOWED_UNREACHED - unreached)
     assert not stale, f"allow-listed modules that are reached or gone: {stale}"
 
+
+
+def _bound_names(node: ast.Import | ast.ImportFrom) -> list[str]:
+    """Names an import statement binds in its scope."""
+    if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+        return []
+    out = []
+    for a in node.names:
+        if a.name == "*":
+            continue
+        if a.asname:
+            out.append(a.asname)
+        elif isinstance(node, ast.Import):
+            out.append(a.name.partition(".")[0])
+        else:
+            out.append(a.name)
+    return out
+
+
+def unused_imports() -> list[str]:
+    """``module: name`` for every imported name, at any level, that its
+    module never references. ``__init__.py`` files are skipped: their
+    imports are the package's re-exports."""
+    found = []
+    for name, path in sorted(_modules().items()):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                found += [f"{name}: {b}" for b in _bound_names(node) if b not in used]
+    return found
+
+
+def test_no_package_module_imports_a_name_it_never_uses():
+    unused = unused_imports()
+    assert not unused, f"imported but never referenced: {unused}"

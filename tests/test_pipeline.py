@@ -692,13 +692,11 @@ def test_collapse_bands_distinct_content_not_corpus(spark):
 
 
 def test_gate_history_collapse_preserves_verdicts(spark):
-    """near_dup_gate with history_assignments (history collapsed to
-    exact-class representatives) must produce the same matched/novel
-    split as the uncollapsed gate: gate verdicts are a pure function of
-    each history row's (bytes, caption)."""
+    """near_dup_gate with collapse_history=True (history collapsed to
+    exact-class representatives by the gate's own ladder stage) must
+    produce the same matched/novel split as the uncollapsed gate: gate
+    verdicts are a pure function of each history row's (bytes, caption)."""
     from pyspark.sql import functions as F
-
-    from yadf_spark.operators import exact
 
     base = spark.createDataFrame(images.images_pdf(96))
     # history = the corpus plus byte-identical copies (viral classes)
@@ -723,7 +721,7 @@ def test_gate_history_collapse_preserves_verdicts(spark):
         )
 
     plain = verdicts()
-    collapsed = verdicts(history_assignments=exact.exact_assignments(hist))
+    collapsed = verdicts(collapse_history=True)
     hist.unpersist()
     batch.unpersist()
     assert plain == collapsed

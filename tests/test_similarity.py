@@ -1,12 +1,12 @@
-"""ANN / similarity-search semantics on planted vectors."""
+"""Dense cosine top-k (``retrieval.brute_force_topk``, the dense tier of
+hybrid retrieval) on planted vectors."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from yadf_spark.operators import similarity
+from yadf_spark.operators import retrieval
 
 DIM = 16
 
@@ -27,7 +27,7 @@ def _vecs(spark, n=60, n_clusters=6, seed=3):
 def test_brute_force_topk_finds_cluster_members(spark):
     df, rows = _vecs(spark)
     queries = df.filter(F.col("vec_id") < 6)
-    out = similarity.brute_force_topk(df, queries, k=5)
+    out = retrieval.brute_force_topk(df, queries, k=5)
     res = {}
     for r in out.collect():
         res.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"], r["cosine"]))
@@ -41,577 +41,16 @@ def test_brute_force_topk_finds_cluster_members(spark):
         assert ranks == [1, 2, 3, 4, 5]
 
 
-def test_srp_ann_matches_brute_force_on_clusters(spark):
-    df, rows = _vecs(spark)
-    out = similarity.ann_topk_srp(df, dim=DIM, k=3, n_bands=8, seed=42)
-    labels = {i: c for i, _, c in rows}
-    got = out.collect()
-    assert got, "SRP ANN produced no candidates"
-    # same-cluster vectors share all SRP bands w.h.p. -> top-3 all same-cluster
-    for r in got:
-        assert labels[r["neighbor_id"]] == labels[r["query_id"]]
-    # every vector should find at least one neighbor (cluster size 10)
-    assert out.select("query_id").distinct().count() == 60
-
-
-def test_srp_probe_keys_flip_exactly_one_lowest_margin_bit(spark):
-    """Kernel contract: each probe key decodes to (band_idx, band_hash)
-    where the hash differs from the row's base band hash in exactly one
-    bit, and the flipped bits are the globally lowest-margin ones."""
-    rng = np.random.default_rng(7)
-    mat = rng.standard_normal((20, DIM))
-    n_bits, n_bands, probes = 64, 8, 5
-    band_bits = n_bits // n_bands
-    planes = similarity.srp_planes(n_bits, DIM, seed=42)
-    sigs = similarity.srp_signatures(mat, planes)
-    keys = similarity.srp_probe_keys(mat, planes, n_bands, probes)
-    margins = np.abs(mat @ planes) / np.linalg.norm(planes, axis=0)[None, :]
-    for r, row_keys in enumerate(keys):
-        assert len(row_keys) == probes
-        expect_bits = set(np.argsort(margins[r], kind="stable")[:probes].tolist())
-        got_bits = set()
-        for k in row_keys:
-            band, h = k >> band_bits, k & ((1 << band_bits) - 1)
-            base = (int(sigs[r]) >> (band * band_bits)) & ((1 << band_bits) - 1)
-            diff = h ^ base
-            assert diff != 0 and diff & (diff - 1) == 0  # exactly one bit
-            got_bits.add(band * band_bits + diff.bit_length() - 1)
-        assert got_bits == expect_bits
-
-
-def test_srp_multiprobe_candidates_superset_and_recall(spark):
-    """probes>0 must only ADD candidate pairs, and on a config where the
-    base bands demonstrably miss true pairs it must recover some."""
-    rng = np.random.default_rng(11)
-    cents = rng.standard_normal((4, DIM))
-    rows = [
-        (i, [float(x) for x in (cents[i % 4] + 0.2 * rng.standard_normal(DIM))], i % 4)
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    true_pairs = {
-        (a, b)
-        for a, _, ca in rows
-        for b, _, cb in rows
-        if a < b and ca == cb
-    }
-    # 4 bands x 16 bits: selective enough that base SRP misses pairs
-    base = {
-        (r.id_a, r.id_b)
-        for r in similarity.srp_candidates(df, dim=DIM, n_bands=4, seed=1).collect()
-    }
-    probed = {
-        (r.id_a, r.id_b)
-        for r in similarity.srp_candidates(
-            df, dim=DIM, n_bands=4, seed=1, probes=12
-        ).collect()
-    }
-    assert base <= probed
-    base_recall = len(base & true_pairs) / len(true_pairs)
-    probe_recall = len(probed & true_pairs) / len(true_pairs)
-    assert base_recall < 1.0, "fixture too easy — tighten it"
-    assert probe_recall > base_recall
-
-
-def test_embedding_near_dup_exact_vs_srp(spark):
-    df, _ = _vecs(spark)
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.embedding_near_dup_pairs(df, DIM, 0.999, exact=True).collect()
-    }
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.embedding_near_dup_pairs(df, DIM, 0.999, exact=False).collect()
-    }
-    assert exact, "planted clusters must produce near-dup pairs"
-    assert approx <= exact
-    recall = len(approx & exact) / len(exact)
-    assert recall >= 0.95, f"SRP near-dup recall {recall}"
-
-
 def test_cosine_zero_vector_safe(spark):
     df = spark.createDataFrame(
         [(0, [0.0] * DIM), (1, [1.0] * DIM)], "vec_id long, embedding array<float>"
     )
-    out = similarity.brute_force_topk(df, df.filter("vec_id = 0"), k=1).collect()
+    out = retrieval.brute_force_topk(df, df.filter("vec_id = 0"), k=1).collect()
     assert out[0]["cosine"] == 0.0
-
-
-def test_exact_near_dup_refuses_oversized_corpus(spark):
-    """The exact path materializes the corpus matrix on the driver; a
-    corpus above max_rows must raise (pointing at the scale paths)
-    BEFORE any toPandas, not OOM (VERDICT r2 item 3)."""
-    df, _ = _vecs(spark, n=20)
-    with pytest.raises(ValueError, match="srp_candidates"):
-        similarity.exact_near_dup_candidates(df, 0.9, max_rows=10).collect()
-    # at or under the bound the path still works
-    out = similarity.exact_near_dup_candidates(df, 0.99, max_rows=20)
-    assert out.count() > 0
 
 
 def test_topk_plan_broadcasts_queries(spark):
     df, _ = _vecs(spark)
-    out = similarity.brute_force_topk(df, df.limit(3), k=2)
+    out = retrieval.brute_force_topk(df, df.limit(3), k=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_ivf_near_dup_recall_vs_exact(spark):
-    """IVF-bucketed pairs must recover nearly all exact cosine>=thr pairs
-    on clustered synthetic vectors (recall >= 0.95 at n_probe=4)."""
-    import numpy as np
-
-    from yadf_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(7)
-    dim, n_clusters, per = 32, 12, 20
-    rows = []
-    for c in range(n_clusters):
-        center = rng.standard_normal(dim)
-        center /= np.linalg.norm(center)
-        for i in range(per):
-            v = center + 0.08 * rng.standard_normal(dim)
-            rows.append((f"v{c:02d}-{i:02d}", [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-
-    exact_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in sim.embedding_near_dup_pairs(df, dim, 0.9, exact=True).collect()
-    }
-    ivf_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in sim.ivf_near_dup_pairs(
-            df, dim, 0.9, n_centroids=16, n_probe=4
-        ).collect()
-    }
-    assert exact_pairs, "fixture must contain near-dup pairs"
-    assert ivf_pairs <= exact_pairs  # exact cosine verify => no false positives
-    recall = len(ivf_pairs & exact_pairs) / len(exact_pairs)
-    assert recall >= 0.95, f"IVF recall {recall:.3f}"
-
-
-def test_ivf_deterministic_with_fixed_centroids(spark):
-    import numpy as np
-
-    from yadf_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(3)
-    rows = [(f"v{i}", [float(x) for x in rng.standard_normal(16)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    cents = sim.train_ivf_centroids(df, 16, n_centroids=8)
-    p1 = sorted(map(tuple, sim.ivf_near_dup_pairs(df, 16, 0.2, centroids=cents).collect()))
-    p2 = sorted(map(tuple, sim.ivf_near_dup_pairs(df, 16, 0.2, centroids=cents).collect()))
-    assert p1 == p2
-
-
-def test_label_centroids_exact_means_and_plan(spark):
-    from yadf_spark.operators import similarity as sim
-
-    rows = [
-        (0, [1.0, 2.0, 3.0]),
-        (0, [3.0, 2.0, 1.0]),
-        (1, [10.0, 0.0, -4.0]),
-    ]
-    df = spark.createDataFrame(rows, "label int, embedding array<float>")
-    out = {(r.label, r.pos): (r.mean_x, r.n)
-           for r in sim.label_centroids(df, "label", "embedding", dim=3).collect()}
-    assert out[(0, 0)] == (2.0, 2) and out[(0, 1)] == (2.0, 2) and out[(0, 2)] == (2.0, 2)
-    assert out[(1, 0)] == (10.0, 1) and out[(1, 2)] == (-4.0, 1)
-    # scale shape: the dim sums must partial-aggregate map-side; the
-    # posexplode unpivot runs on the tiny aggregated frame AFTER the
-    # exchange, never amplifying the corpus-side shuffle
-    plan = (
-        sim.label_centroids(df, "label", "embedding", dim=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange") == 1, plan
-    gen_pos = plan.find("Generate")
-    ex_pos = plan.find("Exchange")
-    assert gen_pos != -1 and ex_pos != -1 and gen_pos < ex_pos, plan[:2000]
-
-
-def test_label_outliers_flags_flipped_vector(spark):
-    """Planted case: two tight label clusters, one row carries the
-    OPPOSITE of its label's direction — it must be the only outlier,
-    with a strongly negative cosine to its own centroid."""
-    rng = np.random.default_rng(7)
-    rows = []
-    base0 = np.zeros(8); base0[0] = 1.0
-    base1 = np.zeros(8); base1[1] = 1.0
-    for i in range(20):
-        base = base0 if i % 2 == 0 else base1
-        v = base + rng.normal(0, 0.01, 8)
-        rows.append((i, [float(x) for x in v], i % 2))
-    # row 100: labeled 0 but pointing along -base0
-    rows.append((100, [float(x) for x in (-base0 + rng.normal(0, 0.01, 8))], 0))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = similarity.label_outliers(df, "vec_id", "label", "embedding", dim=8, max_cosine=0.0)
-    got = {r.vec_id: r.cosine for r in out.collect()}
-    assert set(got) == {100}
-    assert got[100] < -0.8
-
-
-def test_label_outliers_plan_broadcasts_centroids(spark):
-    """The (labels x dim) centroid frame must broadcast — the corpus
-    side is scored in a zero-shuffle narrow map."""
-    rows = [(i, [float(i % 3), 1.0, 0.0], i % 3) for i in range(30)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = similarity.label_outliers(df, "vec_id", "label", "embedding", dim=3, max_cosine=0.5)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def _semdedup_frame(spark):
-    # v0/v1 identical (cosine 1.0), v2 a near-copy of v0 (cos ~0.999),
-    # v3 orthogonal-ish noise — ids ordered so survivor rules matter
-    base = np.random.default_rng(3).normal(size=16).astype("float32")
-    near = base.copy()
-    near[0] += 0.02
-    other = np.roll(base, 7) * np.float32(-1.0)
-    rows = [
-        (0, [float(x) for x in base]),
-        (1, [float(x) for x in base]),
-        (2, [float(x) for x in near]),
-        (3, [float(x) for x in other]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_semantic_dedup_drops_dominated_keeps_earliest(spark):
-    df = _semdedup_frame(spark)
-    got = {
-        r.id: r.kept
-        for r in similarity.semantic_dedup(df, 16, 0.99, n_bands=4, n_bits=2).collect()
-    }
-    # 0 is the earliest of its semantic group -> kept; 1 and 2 are
-    # dominated by 0; 3 is semantically alone
-    assert got == {0: True, 1: False, 2: False, 3: True}
-
-
-def test_semantic_dedup_cells_match_pure_python_fold(spark):
-    """The JVM zip_with/aggregate left fold must equal the plain Python
-    sequential fold over the same exact-rational planes (the property
-    the SQL oracle's replay rests on)."""
-    df = _semdedup_frame(spark)
-    cells = similarity.portable_srp_cells(F.col("embedding"), 16, n_bands=4, n_bits=4)
-    got = {
-        r.vec_id: [r[f"c{j}"] for j in range(4)]
-        for r in df.select(
-            "vec_id", *[c.alias(f"c{j}") for j, c in enumerate(cells)]
-        ).collect()
-    }
-    rows = {r.vec_id: r.embedding for r in df.collect()}
-    for vid, emb in rows.items():
-        for band in range(4):
-            cell = 0
-            for bit in range(4):
-                plane = similarity.portable_plane(band, bit, 16)
-                dot = 0.0
-                for x, w in zip(emb, plane):
-                    dot += float(x) * w
-                if round(dot, 4) >= 0:
-                    cell += 1 << bit
-            assert got[vid][band] == cell, (vid, band)
-
-
-def test_semantic_dedup_embeddings_never_enter_bucket_shuffle(spark):
-    import re
-
-    df = _semdedup_frame(spark)
-    out = similarity.semantic_dedup(df, 16, 0.99)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "_e" not in m.group(1) and "embedding" not in m.group(1), plan
-
-
-def _kmeans_frame(spark):
-    # two tight blobs on orthogonal axes; ids 0 and 1 land in different
-    # blobs so the deterministic init starts one centroid in each
-    rows = [
-        (0, [1.0, 0.0, 0.1]),
-        (1, [0.0, 1.0, 0.1]),
-        (2, [0.9, 0.1, 0.0]),
-        (3, [0.1, 0.9, 0.0]),
-        (4, [1.0, 0.2, 0.0]),
-        (5, [0.2, 1.0, 0.0]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_kmeans_lloyd_separates_blobs(spark):
-    out = similarity.kmeans_lloyd(_kmeans_frame(spark), k=2, iterations=2)
-    by = {r.vec_id: r.cluster for r in out.collect()}
-    assert {by[0], by[2], by[4]} == {0}
-    assert {by[1], by[3], by[5]} == {1}
-
-
-def test_kmeans_assignment_is_map_only(spark):
-    out = similarity.kmeans_lloyd(_kmeans_frame(spark), k=2, iterations=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # centroids are plan literals: the returned frame is scan + project,
-    # no Exchange anywhere (updates happen in separate collected jobs)
-    assert "Exchange" not in plan
-
-
-def test_kmeans_matches_pure_python_fold(spark):
-    df = _kmeans_frame(spark)
-    out = {r.vec_id: (r.cluster, r.cosine) for r in
-           similarity.kmeans_lloyd(df, k=2, iterations=2).collect()}
-
-    rows = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
-
-    def dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s += x * y
-        return s
-
-    def cos(a, b):
-        d = dot(a, a) ** 0.5 * dot(b, b) ** 0.5
-        return round(dot(a, b) / d, 6) if d > 0 else 0.0
-
-    cents = {0: rows[0], 1: rows[1]}
-    for it in range(2):
-        assign = {
-            v: max(sorted(cents), key=lambda c: (cos(e, cents[c]), -c))
-            for v, e in rows.items()
-        }
-        if it == 0:
-            cents = {
-                c: [
-                    round(sum(rows[v][i] for v in rows if assign[v] == c)
-                          / sum(1 for v in rows if assign[v] == c), 6)
-                    for i in range(3)
-                ]
-                for c in set(assign.values())
-            }
-    expect = {v: (assign[v], cos(rows[v], cents[assign[v]])) for v in rows}
-    assert out == expect
-
-
-def test_cluster_prune_drops_most_prototypical_fraction(spark):
-    # init takes the two id-smallest vectors: id 0 seeds the +x blob's
-    # centroid, id 1 the +y outliers'. ids 2-10 land in cluster 0 with
-    # graded cosines; 99 joins id 1 in cluster 1 (both cosine 1.0)
-    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-    rows += [(i, [1.0, 0.05 * i]) for i in range(2, 11)]
-    rows.append((99, [0.0, 1.0]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.cluster_prune(df, k=2, iterations=1, drop_frac=0.4)
-    kept = {r.vec_id: r for r in out.collect()}
-
-    # replicate cluster 0: cosine to centroid [1,0] rounded to 6dp,
-    # then the exact 0.6-quantile (linear interpolation, numpy default)
-    import numpy as np
-
-    cos = {
-        v: round(e[0] / (e[0] ** 2 + e[1] ** 2) ** 0.5, 6)
-        for v, e in ((r[0], r[1]) for r in rows)
-        if v not in (1, 99)
-    }
-    thr = float(np.percentile(sorted(cos.values()), 60.0))
-    expect = {v for v, c in cos.items() if c <= thr}
-    # cluster 1's two members share cosine 1.0 = its threshold: kept
-    expect |= {1, 99}
-    assert set(kept) == expect
-    for v in expect - {1, 99}:
-        assert kept[v].cosine == cos[v]
-
-
-def test_cluster_prune_threshold_join_is_broadcast(spark):
-    rows = [(i, [1.0, 0.01 * i, 0.0]) for i in range(12)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.cluster_prune(df, k=2, iterations=2, drop_frac=0.25)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-def test_cluster_prune_approx_path_runs_and_bounds(spark):
-    rows = [(i, [1.0, 0.05 * i]) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = similarity.cluster_prune(df, k=1, iterations=1, drop_frac=0.5)
-    approx = similarity.cluster_prune(df, k=1, iterations=1, drop_frac=0.5, exact=False)
-    # at 10 rows the sketch is exact up to its quantile definition;
-    # both must keep a non-empty strict subset ordered by cosine
-    ke, ka = exact.count(), approx.count()
-    assert 0 < ke < 10 and 0 < ka < 10
-
-
-# ------------------------------------------------------- product quantization
-
-
-def test_pq_lloyd_shapes_and_dim_guard():
-    rng = np.random.default_rng(0)
-    mat = rng.standard_normal((100, DIM))
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=1)
-    assert books.shape == (4, 8, DIM // 4)
-    with pytest.raises(ValueError):
-        similarity.pq_lloyd(mat, m=5, k=8)
-
-
-def test_pq_codes_quantize_to_nearest_codeword():
-    """Each assigned codeword must be at least as close as every other
-    codeword in its subspace (argmin semantics)."""
-    rng = np.random.default_rng(1)
-    mat = rng.standard_normal((80, DIM))
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=1)
-    codes = similarity.pq_assign_codes(mat, books)
-    dsub = DIM // 4
-    for s in range(4):
-        sub = mat[:, s * dsub : (s + 1) * dsub]
-        d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
-        assert (d2[np.arange(len(mat)), codes[:, s]] <= d2.min(axis=1) + 1e-12).all()
-
-
-def test_pq_encode_distributed_matches_kernel(spark):
-    """Arrow batching must not change the codes — the distributed
-    encode equals a single-process run over float32-roundtripped
-    values (the storage dtype of the embedding column)."""
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=7)
-    want = similarity.pq_assign_codes(mat, books)
-    got = {r.id: list(r.code) for r in similarity.pq_encode(df, books).collect()}
-    assert all(got[i] == list(want[i]) for i in range(len(rows)))
-
-
-def test_pq_topk_recalls_planted_clusters(spark):
-    """ADC over 4-byte-ish codes must still surface the planted
-    cluster: every top-4 neighbor of a query shares its cluster (the
-    clusters are far apart relative to quantization error)."""
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    books = similarity.pq_lloyd(mat, m=4, k=16, seed=7)
-    labels = {i: c for i, _, c in rows}
-    out = similarity.pq_topk(df, df.filter("vec_id < 6"), books, k=4)
-    res = {}
-    for r in out.collect():
-        res.setdefault(r.query_id, []).append(r.neighbor_id)
-    assert set(res) == set(range(6))
-    for q, nbrs in res.items():
-        assert len(nbrs) == 4
-        assert all(labels[n] == labels[q] for n in nbrs)
-
-
-def test_pq_encode_is_a_narrow_map(spark):
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=7)
-    plan = similarity.pq_encode(df, books)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
-def test_pq_topk_refuses_unbounded_query_side(spark, monkeypatch):
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=7)
-    monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 10)
-    with pytest.raises(ValueError, match="batch them"):
-        similarity.pq_topk(df, df, books, k=3)
-
-
-def test_ivf_pq_topk_recalls_planted_clusters(spark):
-    """Routing through coarse cells + ADC over codes still surfaces the
-    planted cluster members for every query."""
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    cents = similarity.kmeans_cosine_centroids(mat, 8, seed=5)
-    books = similarity.pq_lloyd(mat, m=4, k=16, seed=7)
-    labels = {i: c for i, _, c in rows}
-    out = similarity.ivf_pq_topk(df, df.filter("vec_id < 6"), cents, books, k=4, n_probe=3)
-    res = {}
-    for r in out.collect():
-        res.setdefault(r.query_id, []).append(r.neighbor_id)
-    assert set(res) == set(range(6))
-    for q, nbrs in res.items():
-        assert len(nbrs) == 4
-        assert all(labels[n] == labels[q] for n in nbrs)
-
-
-def test_ivf_pq_routing_is_a_broadcast_join(spark):
-    """The cell-routing join must broadcast the tiny query side — a
-    SortMergeJoin would shuffle the whole index frame."""
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    cents = similarity.kmeans_cosine_centroids(mat, 8, seed=5)
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=7)
-    plan = (
-        similarity.ivf_pq_topk(df, df.filter("vec_id < 3"), cents, books, k=3, n_probe=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-def test_pq_cells_codes_is_a_one_scan_narrow_map(spark):
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    cents = similarity.kmeans_cosine_centroids(mat, 8, seed=5)
-    books = similarity.pq_lloyd(mat, m=4, k=8, seed=7)
-    plan = (
-        similarity.pq_cells_codes(df, cents, books)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan, plan
-
-
-def test_ivf_pq_served_from_persisted_index_matches_inline(spark, tmp_path):
-    """Build-once/serve-many: the cell-partitioned persisted index must
-    produce the inline path's exact results, and the serving scan must
-    carry the probed-cell partition filter."""
-    df, rows = _vecs(spark)
-    mat = np.array([e for _, e, _ in rows], dtype=np.float64)
-    cents = similarity.kmeans_cosine_centroids(mat, 8, seed=5)
-    books = similarity.pq_lloyd(mat, m=4, k=16, seed=7)
-    queries = df.filter("vec_id < 6")
-    inline = similarity.ivf_pq_topk(df, queries, cents, books, k=4, n_probe=3)
-
-    path = str(tmp_path / "pq_index")
-    similarity.write_pq_index(similarity.pq_cells_codes(df, cents, books), path)
-    index = similarity.read_pq_index(spark, path)
-    served = similarity.ivf_pq_topk_over_index(index, queries, cents, books, k=4, n_probe=3)
-    assert sorted(map(tuple, served.collect())) == sorted(map(tuple, inline.collect()))
-
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan.replace("#", " #").replace("  ", " ") or (
-        "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:200]
-    ), plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-def test_embedding_ingest_gate_blocks_near_dups_keeps_novel(spark):
-    """Batch rows with a history near-twin are gated out; genuinely new
-    vectors pass; a row whose ONLY match is itself (overlapping id
-    spaces) must pass."""
-    rng = np.random.default_rng(11)
-    cents = rng.standard_normal((4, DIM))
-    hist_rows = [
-        (100 + i, [float(x) for x in (cents[i % 4] + 0.01 * rng.standard_normal(DIM)).astype(np.float32)])
-        for i in range(20)
-    ]
-    history = spark.createDataFrame(hist_rows, "vec_id long, embedding array<float>")
-    novel = rng.standard_normal((3, DIM))
-    # a unique direction present in BOTH corpora under the same id —
-    # its only candidate is its self-pair, which must not gate it
-    uniq = [float(x) for x in rng.standard_normal(DIM).astype(np.float32)]
-    batch_rows = (
-        # near-dups of history cluster 0/1 -> must be gated
-        [(0, [float(x) for x in (cents[0] + 0.01 * rng.standard_normal(DIM)).astype(np.float32)]),
-         (1, [float(x) for x in (cents[1] + 0.01 * rng.standard_normal(DIM)).astype(np.float32)])]
-        # novel directions -> must pass
-        + [(2 + j, [float(x) for x in novel[j].astype(np.float32)]) for j in range(3)]
-        + [(100, uniq)]
-    )
-    history = spark.createDataFrame(hist_rows + [(100, uniq)],
-                                    "vec_id long, embedding array<float>")
-    batch = spark.createDataFrame(batch_rows, "vec_id long, embedding array<float>")
-    out = similarity.embedding_near_dup_anti_join(
-        batch, history, DIM, min_cosine=0.95, n_bands=16, seed=3
-    )
-    kept = sorted(r.vec_id for r in out.collect())
-    assert 0 not in kept and 1 not in kept
-    assert {2, 3, 4}.issubset(set(kept))
-    assert 100 in kept  # survives: only its self-pair matched

@@ -16,10 +16,9 @@ image + caption pairs:
   PSNR), and connected-components clustering;
 * a streaming ingest gate: micro-batches checked against an on-disk
   band index of everything already ingested;
-* training-data curation over text/embedding tables: exact + fuzzy
-  text dedup, ANN similarity search, language id, quality scoring,
-  token counting, fingerprinting, and leakage-guarded cluster-safe
-  splits.
+* training-data curation over text tables: exact + fuzzy text dedup,
+  language id, quality scoring, token counting, fingerprinting, and
+  leakage-guarded cluster-safe splits.
 
 Everything is DataFrame API + column expressions + vectorized
 pandas/Arrow UDFs. No per-row Python in any hot path.

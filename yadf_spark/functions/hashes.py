@@ -134,19 +134,6 @@ def full_hash(payload: Column, algo: str) -> Column:
     return F.concat(F.lit("f:"), _digest(algo, payload))
 
 
-def band_columns(value: Column, n_bands: int = 4, band_bits: int = 16) -> list[Column]:
-    """Split a 64-bit hash (phash / simhash) into ``n_bands`` disjoint
-    bit-bands. Two values within Hamming distance < n_bands share at
-    least one band (pigeonhole), so banding is a recall-complete
-    prefilter for small radii — the generalization of the reference's
-    size pre-grouping (src/fs.rs:42-47) to Hamming space."""
-    mask = (1 << band_bits) - 1
-    return [
-        F.shiftrightunsigned(value, i * band_bits).bitwiseAND(F.lit(mask)).alias(f"band_{i}")
-        for i in range(n_bands)
-    ]
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit hashes — JVM-side bit_count(xor)."""
     return F.bit_count(a.bitwiseXOR(b))

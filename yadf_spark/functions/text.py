@@ -184,7 +184,3 @@ def bpe_tokens(text: Column) -> Column:
     """BPE-ish subword pre-tokens (the unit an actual BPE merge table
     would operate on)."""
     return F.regexp_extract_all(text, F.lit(BPE_PATTERN), 0)
-
-
-def bpe_token_count(text: Column) -> Column:
-    return F.size(bpe_tokens(text))

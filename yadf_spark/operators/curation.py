@@ -1762,7 +1762,7 @@ def bpe_merges(
     vocab frame only — pair extraction and the left-to-right greedy
     merge are JVM array expressions (``transform``/``aggregate``
     folds, zero Python), the per-iteration argmax is a 1-row collect
-    (the k-means-update shape, not a corpus collect), and the vocab
+    (not a corpus collect), and the vocab
     frame re-localCheckpoints every third round (measured cheaper than
     per-round eager materialization) so the plan stays shallow across
     hundreds of merges. BPE's merge sequence is inherently

@@ -28,7 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from yadf_spark.fixtures import codec
 
@@ -209,8 +208,7 @@ def image_embedding(
 ) -> DataFrame:
     """Deterministic content embedding: a channel-wise intensity
     histogram, L2-normalized — the decode→feature seam a real CLIP-style
-    encoder would occupy. Output ``(image_id, embedding array<float>)``
-    feeds the ANN operators (operators/similarity.py) unchanged."""
+    encoder would occupy. Output ``(image_id, embedding array<float>)``."""
     if dim % 4 != 0:
         # fail at plan time: inside the kernel this would surface as
         # every row silently degrading to a null embedding

@@ -205,7 +205,6 @@ def near_dup_gate(
     cfg: NearDupConfig | None = None,
     checkpointer: Checkpointer | None = None,
     history_fingerprint: str | None = None,
-    history_assignments: DataFrame | None = None,
     collapse_history: bool = False,
     ladder_cfg=None,
 ) -> dict:
@@ -237,9 +236,7 @@ def near_dup_gate(
     banding/verification, running the exact ladder over the history
     inside a checkpointed stage (``ladder_cfg`` selects the hash algo;
     with a workdir-backed checkpointer a resumed or repeated daily gate
-    re-reads the collapsed history instead of re-hashing it).
-    Alternatively pass ``history_assignments`` (a precomputed ladder
-    output) to skip the in-stage ladder. Either way: the gate's
+    re-reads the collapsed history instead of re-hashing it). The gate's
     verdicts are a pure function of each history row's (bytes,
     caption, phash), so a class representative matches exactly the
     batch rows any member would, and ``matched_ids``/``novel`` are
@@ -258,9 +255,7 @@ def near_dup_gate(
     ck = checkpointer or Checkpointer(spark=batch.sparkSession, workdir=None, eager=False)
     from yadf_spark.operators import minhash
 
-    if history_assignments is not None:
-        history = collapse_to_representatives(history, history_assignments)
-    elif collapse_history:
+    if collapse_history:
         history = ck.stage(
             "gate_history_reps",
             {"history": history_fingerprint, "ladder": ladder_cfg},
@@ -296,7 +291,7 @@ def near_dup_gate(
             "bits": cfg.phash_band_bits,
             "flip": ("d4" if cfg.flip_invariant else False),
             "history": history_fingerprint,
-            "hist_collapse": history_assignments is not None or collapse_history,
+            "hist_collapse": collapse_history,
         },
         lambda: minhash.cross_candidate_pairs_from_buckets(
             _buckets(batch), _buckets(history), cfg.lsh.salt_bucket_above, cfg.lsh.max_bucket

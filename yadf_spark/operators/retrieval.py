@@ -1,5 +1,6 @@
-"""Lexical and hybrid retrieval over the corpus — BM25 top-k and
-reciprocal-rank fusion with the dense (ANN) tier.
+"""Lexical and hybrid retrieval over the corpus — BM25 top-k, a
+brute-force cosine top-k over an embedding column (the dense tier), and
+reciprocal-rank fusion of rankings.
 
 Retrieval is load-bearing inside a curation pipeline, not a separate
 product: fuzzy decontamination triage, duplicate-cluster inspection,
@@ -7,7 +8,7 @@ and eval-set mining all reduce to "given a few query strings, the
 top-k corpus documents". BM25 (Robertson et al.; the Lucene-style
 ``ln(1 + (N - df + .5)/(df + .5))`` idf) is the standard lexical
 scorer; reciprocal-rank fusion (Cormack et al. 2009) combines it with
-an embedding ranking without score calibration.
+the dense cosine ranking without score calibration.
 
 Scale shape, stage by stage:
 
@@ -23,23 +24,23 @@ Scale shape, stage by stage:
   shuffle it didn't already need for its own construction.
 * **Scoring** is a broadcast hash join + one partial-agg groupBy on
   (query, doc); ``N`` and the average document length enter as plan
-  literals (two 1-row aggregates, the k-means-update shape).
-* **Top-k** reuses the shared two-phase selection
-  (``similarity.partial_topk``): per-partition prune to q·k rows, then
-  the exact window — never an n-row straggler per query.
+  literals (two 1-row aggregates).
+* **Top-k** is a two-phase selection (``_partial_topk``), shared by
+  BM25 and the dense tier: per-partition prune to q·k rows, then the
+  exact window — never an n-row straggler per query.
 
 Every formula term is float64-closed arithmetic DuckDB reproduces, so
-the contract oracle replays tf, df, idf, score, and rank relationally
+the contract oracle replays tf, df, idf, score, cosine, and rank relationally
 — no stored truth anywhere in this module.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yadf_spark.functions import text as T
-from yadf_spark.operators.similarity import partial_topk
 
 
 def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -52,6 +53,33 @@ def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy("doc", "term")
         .agg(F.count("*").cast("long").alias("tf"), F.first("doc_len").alias("doc_len"))
     )
+
+
+def _partial_topk(scored: DataFrame, k: int, metric: str) -> DataFrame:
+    """Per-partition top-k per query (two-phase top-k, phase 1): the k
+    LARGEST ``metric`` values, ties on neighbor id.
+
+    Without this, ``row_number() OVER (PARTITION BY query_id)`` shuffles
+    every (query x corpus-row) scored pair onto one task per query — an
+    n-row straggler per query at corpus scale. The partial pass keeps at
+    most k rows per query per partition (running top-k across Arrow
+    batches, memory O(q*k + batch)), so the final exact window sees
+    q * k * partitions rows instead of q * n. Selection only — metric
+    values pass through untouched, so oracle bit-identity holds."""
+
+    def kernel(batches):
+        acc = None
+        for b in batches:
+            cur = b if acc is None else pd.concat((acc, b), ignore_index=True)
+            cur = cur.sort_values(
+                ["query_id", metric, "neighbor_id"], ascending=[True, False, True]
+            )
+            acc = cur.groupby("query_id", sort=False).head(k)
+        if acc is not None and len(acc):
+            yield acc
+
+    pruned = scored.select("query_id", "neighbor_id", metric)
+    return pruned.mapInPandas(kernel, pruned.schema)
 
 
 def bm25_topk(
@@ -111,10 +139,45 @@ def bm25_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        partial_topk(scored, k, metric="score", ascending=False)
+        _partial_topk(scored, k, "score")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
+    )
+
+
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+) -> DataFrame:
+    """Dense tier: for each query vector the k nearest corpus vectors by
+    cosine — ``(query_id, neighbor_id, cosine, rank)``, self-matches
+    excluded, cosine rounded to 6 dp (0.0 for a zero vector), ties on
+    neighbor id. The (small) query set broadcasts against the corpus;
+    norms are computed per row and the dot product per pair runs
+    JVM-side, in the oracle's ``dot / (norm_a * norm_b)`` shape so
+    cosines stay bit-identical. Top-k is the same two-phase selection."""
+
+    def side(df, id_alias, sfx):
+        e = F.transform(F.col(emb_col), lambda x: x.cast("double"))
+        norm = F.sqrt(F.aggregate(F.transform(e, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
+        return df.select(F.col(id_col).alias(id_alias), e.alias(f"e{sfx}"), norm.alias(f"n{sfx}"))
+
+    pairs = side(corpus, "neighbor_id", "b").crossJoin(F.broadcast(side(queries, "query_id", "a")))
+    dot = F.aggregate(F.zip_with("ea", "eb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    denom = F.col("na") * F.col("nb")
+    scored = pairs.withColumn(
+        "cosine", F.round(F.when(denom > 0, dot / denom).otherwise(F.lit(0.0)), 6)
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        _partial_topk(scored, k, "cosine")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 

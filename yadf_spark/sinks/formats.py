@@ -110,8 +110,8 @@ def csv_lines(groups: DataFrame, header: bool = True) -> DataFrame:
 
 
 #: ``render()`` collects every group to the driver (CLI stdout parity).
-#: Above this many groups the collect itself is the scale bug — the
-#: EXACT_MAX_ROWS discipline (similarity.py) applied to the sink side.
+#: Above this many groups the collect itself is the scale bug, so the
+#: render refuses instead of collecting.
 RENDER_MAX_GROUPS = 1_000_000
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__).warning
 
-from yadf_spark.config import LshConfig, NearDupConfig
+from yadf_spark.config import NearDupConfig
 from yadf_spark.functions import hashes
 
 

@@ -73,8 +73,9 @@ def run_contract(spark, sf_dir: str, only: list[str] | None = None) -> dict[str,
     """Run every queries()/oracle_sql() pair like the driver does.
 
     Points the entry module's CONTRACT_SF_DIR at ``sf_dir`` while
-    building the oracle SQL, so the seeded-ANN stored-truth replays
-    (ann_topk_srp / ivf_near_dup) regenerate against the same tables the
+    building the oracle SQL, so the BPE stored-truth replays
+    (bpe_merges_docs / bpe_encode_docs), the one oracle input still
+    read from CONTRACT_SF_DIR, regenerate against the same tables the
     Spark queries read — the driver itself runs at the module default
     (sf0.01) and never needs the override."""
     import __spark_entry__ as entrymod
