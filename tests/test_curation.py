@@ -918,47 +918,6 @@ def test_repeated_spans_stride_catches_aligned_duplicates(spark):
     assert ("s1", 0, last_start + 30) in spans and ("s2", 0, last_start + 30) in spans
 
 
-# ---------------------------------------------------------------------------
-# HTML boilerplate stripping
-# ---------------------------------------------------------------------------
-
-def test_strip_html_planted(spark):
-    """Script/style content vanishes whole (including a stray '<' inside
-    the script that would break naive tag-stripping), tags become
-    spaces, entities decode in the order that keeps '&amp;lt;' literal,
-    whitespace collapses, the title extracts, and null text stays null."""
-    rows = [
-        (
-            "a",
-            '<html><head><title>Page One</title><style>p < q {}</style>'
-            '<script>if (1 < 2) { alert("x"); }</script></head>'
-            '<body><p>Hello   <b>world</b></p>Fish &amp; Chips &lt;tag&gt; &amp;lt;</body></html>',
-        ),
-        ("b", "no markup at all"),
-        ("c", None),
-        ("d", "<p>only&nbsp;body</p>"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {r.id: r for r in curation.strip_html(df, "doc_id", "text").collect()}
-    assert out["a"].clean_text == "Page One Hello world Fish & Chips <tag> &lt;"
-    assert out["a"].title == "Page One"
-    assert out["a"].n_tags > 0
-    assert out["b"].clean_text == "no markup at all" and out["b"].title is None
-    assert out["b"].n_tags == 0
-    assert out["c"].clean_text is None and out["c"].title is None and out["c"].n_tags == 0
-    assert out["d"].clean_text == "only body"
-
-
-def test_strip_html_is_a_narrow_map(spark):
-    """The extraction must stay a zero-shuffle column chain — no
-    Exchange of any kind in the plan."""
-    df = spark.createDataFrame([("a", "<p>x</p>")], "doc_id string, text string")
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        curation.strip_html(df, "doc_id", "text")._jdf.queryExecution(), "formatted"
-    )
-    assert "Exchange" not in plan
-
-
 def test_repeated_spans_truncate_lineage_is_result_invariant(spark):
     """truncate_lineage only changes whether the window rows
     materialize once or the hash pass runs per consumer — spans must be
@@ -977,57 +936,6 @@ def test_repeated_spans_truncate_lineage_is_result_invariant(spark):
 
 
 # ---------------------------------------------------------------- URLs
-
-
-def _urls(spark):
-    rows = [
-        # protocol/www/tracking variants of the same page — one group
-        (1, "https://www.Example.com/page"),
-        (2, "HTTPS://EXAMPLE.COM:443/page#frag"),
-        (3, "https://example.com/page/?utm_source=tw"),
-        # same host, different (case-sensitive) path — distinct
-        (4, "https://example.com/Page"),
-        # http default port + params surviving the tracking strip
-        (5, "http://a.example:80/x?utm_campaign=c&id=2&fbclid=zz"),
-        (6, "http://a.example/x?id=2"),
-        # no scheme at all — generic steps only
-        (7, "a.example/x/"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, url string")
-
-
-def test_canonical_url_normalizes_each_axis(spark):
-    got = dict(
-        _urls(spark)
-        .select("doc_id", curation.canonical_url(F.col("url")).alias("c"))
-        .collect()
-    )
-    assert got[1] == "https://example.com/page"
-    assert got[2] == "https://example.com/page"
-    assert got[3] == "https://example.com/page"
-    assert got[4] == "https://example.com/Page"  # path case preserved
-    assert got[5] == "http://a.example/x?id=2"
-    assert got[6] == "http://a.example/x?id=2"
-    assert got[7] == "a.example/x"
-
-
-def test_url_dedup_groups_and_keeps_smallest_id(spark):
-    out = {r.canon_url: r for r in curation.url_dedup(_urls(spark), "doc_id", "url").collect()}
-    assert out["https://example.com/page"].n_docs == 3
-    assert out["https://example.com/page"].keeper == 1
-    assert out["http://a.example/x?id=2"].n_docs == 2
-    assert out["http://a.example/x?id=2"].keeper == 5
-    assert out["https://example.com/Page"].n_docs == 1
-
-
-def test_canonical_url_is_a_narrow_jvm_map(spark):
-    plan = (
-        _urls(spark)
-        .select(curation.canonical_url(F.col("url")).alias("c"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan and "ArrowEval" not in plan, plan
 
 
 # ------------------------------------------------------------ C4 rules
@@ -1075,76 +983,6 @@ def test_c4_clean_is_a_narrow_jvm_map(spark):
 # ------------------------------------------------------------ BPE training
 
 
-def test_bpe_merges_match_reference_kernel(spark):
-    """The distributed trainer (vocab agg + JVM pair/fold expressions +
-    per-round argmax) must reproduce the sequential reference kernel's
-    merge table exactly, tie-breaks included."""
-    rows = [(1, "low low lower lowest"), (2, "new newer newest low"), (3, "wider wide new")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = [
-        (r.left, r.right, r.freq)
-        for r in curation.bpe_merges(df, "doc_id", "text", n_merges=6).orderBy("rank").collect()
-    ]
-    wc = {}
-    for _, t in rows:
-        for w in t.lower().split():
-            wc[w] = wc.get(w, 0) + 1
-    assert got == curation.bpe_train_kernel(wc, 6)
-
-
-def test_bpe_greedy_fold_handles_overlapping_pairs(spark):
-    """'aaaa' under merge (a,a) must collapse left-to-right to
-    (aa, aa) — not chain into aaa — in both engines."""
-    df = spark.createDataFrame([(1, "aaaa aaaa aa b")], "doc_id long, text string")
-    got = [
-        (r.left, r.right, r.freq)
-        for r in curation.bpe_merges(df, "doc_id", "text", n_merges=3).orderBy("rank").collect()
-    ]
-    want = curation.bpe_train_kernel({"aaaa": 2, "aa": 1, "b": 1}, 3)
-    assert got == want
-    # first merge is (a, a) seen 3+3+1 = 7 times (overlaps counted)
-    assert got[0] == ("a", "a", 7)
-
-
-def test_bpe_merges_empty_corpus_and_exhaustion(spark):
-    df = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-    out = curation.bpe_merges(df, "doc_id", "text", n_merges=50).collect()
-    # a 1-word corpus exhausts its pairs: ab</w> -> 2 merges max
-    assert 0 < len(out) <= 2 + 1
-    empty = spark.createDataFrame([(1, "  ")], "doc_id long, text string")
-    assert curation.bpe_merges(empty, "doc_id", "text", n_merges=3).count() == 0
-
-
-def test_bpe_encode_matches_reference_kernel(spark):
-    """The distributed encoder (distinct-word JVM folds + pos-ordered
-    reassembly) must reproduce the sequential kernel per document,
-    including empty and whitespace-only docs (0 subwords)."""
-    rows = [
-        (1, "low low lower lowest"),
-        (2, "new newer newest low"),
-        (3, "wider wide new"),
-        (4, "   "),
-        # trailing non-space whitespace: Spark's split emits a '' token
-        # here (trim strips 0x20 only) — the operators filter it, so
-        # the kernel twin (whitespace split, no empties) must agree
-        (5, "tail newline\n"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    trained = curation.bpe_merges(df, "doc_id", "text", n_merges=6).orderBy("rank").collect()
-    merges = [(r.left, r.right) for r in trained]
-    got = {
-        r.id: (r.n_subwords, list(r.subwords))
-        for r in curation.bpe_encode(df, merges, "doc_id", "text").collect()
-    }
-    for doc_id, text in rows:
-        subs: list[str] = []
-        for w in text.lower().split():
-            subs.extend(curation.bpe_encode_kernel(w, merges))
-        assert got[doc_id] == (len(subs), subs), (doc_id, merges)
-    assert got[4] == (0, [])
-    assert merges, "trained merge table must be non-empty"
-
-
 def test_c4_clean_null_text_is_an_empty_page(spark):
     df = spark.createDataFrame([(1, None)], "doc_id long, text string")
     r = curation.c4_clean(df, "doc_id", "text").collect()[0]
@@ -1176,36 +1014,6 @@ def test_curate_text_corpus_composes_all_four_stages(spark):
                             "val" if _bucket("1:split") < 95 else "test")
 
 
-def test_canonical_url_leaves_path_ampersand_alone(spark):
-    """A '&' that is part of the PATH of a query-less URL must not be
-    rewritten into a '?' — 'x&y' and 'x?y' are different pages."""
-    rows = [(1, "http://ex.com/x&y"), (2, "http://ex.com/x?y"),
-            (3, "http://ex.com/x?utm_source=a&y=1")]
-    got = dict(
-        spark.createDataFrame(rows, "doc_id long, url string")
-        .select("doc_id", curation.canonical_url(F.col("url")).alias("c"))
-        .collect()
-    )
-    assert got[1] == "http://ex.com/x&y"
-    assert got[2] == "http://ex.com/x?y"
-    assert got[3] == "http://ex.com/x?y=1"  # leading tracking param re-anchors
-    assert got[1] != got[2]
-
-
-def test_canonical_url_strips_consecutive_tracking_params(spark):
-    rows = [(1, "http://ex.com/p?utm_a=1&utm_b=2&id=3"),
-            (2, "http://ex.com/p?utm_a=1&utm_b=2"),
-            (3, "http://ex.com/p?id=3&utm_a=1&fbclid=z")]
-    got = dict(
-        spark.createDataFrame(rows, "doc_id long, url string")
-        .select("doc_id", curation.canonical_url(F.col("url")).alias("c"))
-        .collect()
-    )
-    assert got[1] == "http://ex.com/p?id=3"
-    assert got[2] == "http://ex.com/p"
-    assert got[3] == "http://ex.com/p?id=3"
-
-
 def test_c4_clean_handles_crlf_line_endings(spark):
     """CRLF documents must behave exactly like LF ones: no stray \\r in
     clean_text, and line verdicts identical to the LF version."""
@@ -1216,28 +1024,6 @@ def test_c4_clean_handles_crlf_line_endings(spark):
     assert out[1].clean_text == out[2].clean_text
     assert "\r" not in out[2].clean_text
     assert out[1].n_kept_lines == out[2].n_kept_lines == 2
-
-
-def test_canonical_url_is_idempotent(spark):
-    """Canonicalization must be a projection: applying it twice changes
-    nothing, over every axis the chain touches (and their stacks)."""
-    urls = [
-        "https://www.Example.com:443/Path/?utm_source=a&id=1#f",
-        "HTTP://WWW.A.B:80/x&y?utm_a=1&utm_b=2",
-        "https://ex.com/a/b/c/",
-        "ex.com/no-scheme/?fbclid=zz",
-        "https://ex.com/?utm_medium=m",
-        "http://ex.com",
-        "a.example/x&y",
-        "https://ex.com/x?id=1&gclid=g&id2=2#frag",
-    ]
-    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i long, url string")
-    once = curation.canonical_url(F.col("url"))
-    out = df.select(
-        "i", once.alias("c1"),
-    ).withColumn("c2", curation.canonical_url(F.col("c1")))
-    for r in out.collect():
-        assert r.c1 == r.c2, (urls[r.i], r.c1, r.c2)
 
 
 def test_c4_clean_is_idempotent_on_kept_pages(spark):

@@ -10,7 +10,10 @@ callers.
 
 A second ``ast`` scan fails on imports a module never uses: a dead
 import keeps a dependency (and, for package modules, an import-graph
-edge) alive for code that no longer exists."""
+edge) alive for code that no longer exists.
+
+A third walk does the same per top-level function and class, by name
+references from the entry points and from ``perfbench``."""
 
 from __future__ import annotations
 
@@ -27,10 +30,6 @@ ALLOWED_UNREACHED = {
     "yadf_spark.fixtures.images",
     # the DuckDB contract harness: tests and the driver contract only
     "yadf_spark.testing",
-    # BM25 and rank fusion: contract queries and their own tests
-    "yadf_spark.operators.retrieval",
-    # as-of / interval joins, sessions, funnels: contract queries and tests
-    "yadf_spark.operators.temporal",
 }
 
 
@@ -129,3 +128,166 @@ def unused_imports() -> list[str]:
 def test_no_package_module_imports_a_name_it_never_uses():
     unused = unused_imports()
     assert not unused, f"imported but never referenced: {unused}"
+
+
+# ------------------------------------------------------ function level
+
+PERFBENCH_DIR = PKG_DIR.parent / "perfbench"
+
+#: modules whose functions are not checked: fixtures and test harnesses
+FUNCTION_CHECK_SKIPPED = {"yadf_spark.fixtures.images", "yadf_spark.testing"}
+
+#: top-level functions and classes outside the entry points' reach on
+#: purpose, by module
+ALLOWED_UNREACHED_FUNCTIONS = {
+    # the format sniffer multimodal.decode_metadata mirrors; codec tests
+    "yadf_spark.fixtures.codec": {"sniff_format"},
+    # text language id, quality and winnowing: contract queries and tests
+    "yadf_spark.functions.text": {
+        "language_id",
+        "quality_features",
+        "quality_score",
+        "winnow_fingerprints",
+    },
+    # audio features and segments: contract queries and tests
+    "yadf_spark.operators.audio": {
+        "audio_feature_values",
+        "audio_features",
+        "encode_fake_audio",
+        "segment_sample",
+    },
+    # curation families outside the ``curate`` mode's path: contract
+    # queries and tests
+    "yadf_spark.operators.curation": {
+        "_bigrams",
+        "_hashed_grams",
+        "_lower_tokens",
+        "_mix_rates",
+        "_word_kgrams",
+        "apply_mix",
+        "cap_per_group",
+        "char_class_stats",
+        "chunk_text",
+        "classifier_score",
+        "decontaminate",
+        "dedup_lines",
+        "denylist_filter",
+        "denylist_hits",
+        "dsir_fit",
+        "dsir_resample",
+        "dsir_weights",
+        "fuzzy_decontaminate",
+        "lm_score",
+        "mix_weights",
+        "quantile_threshold_filter",
+        "redact_pii",
+        "repetition_features",
+        "shuffle_shards",
+        "source_overlap",
+        "split_leakage_report",
+        "stratified_sample",
+        "tf_idf",
+        "vocabulary",
+    },
+    # exact groups as member lists: contract queries and ladder tests
+    "yadf_spark.operators.exact": {"exact_dup_groups"},
+    # edit-distance pairs and the anti-join: contract queries and tests
+    "yadf_spark.operators.minhash": {"edit_distance_pairs", "near_dup_anti_join"},
+    # image/video/crop/alignment operators outside the image pipeline:
+    # contract queries and tests
+    "yadf_spark.operators.multimodal": {
+        "_pack_bits",
+        "ahash_kernel",
+        "alignment_kernel",
+        "aspect_bucket_assignments",
+        "caption_alignment",
+        "caption_embedding_kernel",
+        "crop_near_dup_pairs",
+        "decode_metadata",
+        "dhash_kernel",
+        "embed_pixels",
+        "encode_fake_video",
+        "ensemble_near_dup_pairs",
+        "format_audit",
+        "image_embedding",
+        "resize_images",
+        "resize_pixels",
+        "tile_phash_kernel",
+        "video_near_dup_pairs",
+        "with_hash_ensemble",
+        "with_tile_phashes",
+    },
+    # driver-side references the distributed recall/precision are
+    # tested against
+    "yadf_spark.operators.pipeline": {
+        "dup_pair_precision_driver_reference",
+        "dup_pair_recall_driver_reference",
+    },
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _exported(tree: ast.Module) -> set[str]:
+    """The names a module lists in ``__all__``."""
+    for s in tree.body:
+        if isinstance(s, ast.Assign) and [getattr(t, "id", None) for t in s.targets] == ["__all__"]:
+            return {c.value for c in s.value.elts}
+    return set()
+
+
+def _referenced(node: ast.AST) -> set[str]:
+    """Every ``Name`` and ``Attribute`` name under ``node``."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def reached_functions() -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
+    """(all, reached) top-level functions and classes of the package, as
+    ``(module, name)``.
+
+    Roots are the module bodies (top-level statements other than
+    definitions) of every module in the entry points' import graph, the
+    ``__all__`` of each entry point, and the whole of each
+    ``perfbench/*.py``. A reached definition reaches every package
+    definition whose name it references; names are matched without
+    resolving scopes, which can only count dead code as reached, never
+    the reverse."""
+    by_name: dict[str, list[tuple[str, ast.AST]]] = {}
+    bodies: dict[str, list[ast.stmt]] = {}
+    exported: set[str] = set()
+    for mod, path in _modules().items():
+        tree = ast.parse(path.read_text(), str(path))
+        bodies[mod] = [s for s in tree.body if not isinstance(s, _DEFS)]
+        if mod in ROOTS:
+            exported |= _exported(tree)
+        for s in tree.body:
+            if isinstance(s, _DEFS):
+                by_name.setdefault(s.name, []).append((mod, s))
+    todo = [_referenced(s) for m in reached_modules() for s in bodies[m]]
+    todo += [_referenced(ast.parse(p.read_text(), str(p))) for p in PERFBENCH_DIR.glob("*.py")]
+    todo.append(exported)
+    reached: set[tuple[str, str]] = set()
+    while todo:
+        for name in todo.pop():
+            for mod, node in by_name.get(name, ()):
+                if (mod, name) not in reached:
+                    reached.add((mod, name))
+                    todo.append(_referenced(node))
+    everything = {(mod, name) for name, defs in by_name.items() for mod, _ in defs}
+    return everything, reached
+
+
+def test_every_package_function_is_reached_from_an_entry_point():
+    everything, reached = reached_functions()
+    unreached = {(m, n) for m, n in everything - reached if m not in FUNCTION_CHECK_SKIPPED}
+    allowed = {(m, n) for m, names in ALLOWED_UNREACHED_FUNCTIONS.items() for n in names}
+    dead = sorted(f"{m}.{n}" for m, n in unreached - allowed)
+    assert not dead, f"functions and classes no CLI mode, pipeline or stream reaches: {dead}"
+    stale = sorted(f"{m}.{n}" for m, n in allowed - unreached)
+    assert not stale, f"allow-listed functions that are reached or gone: {stale}"

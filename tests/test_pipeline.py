@@ -111,6 +111,32 @@ def test_checkpoint_resume(spark, tmp_path):
     assert not resumed["verify"], "changed verify config must recompute"
 
 
+def test_fused_pipeline_job_count(spark):
+    """Spark jobs of one fused pipeline call, made the way the benchmark
+    makes it: a lazy in-memory checkpointer and one ``noop`` write. Each
+    job is a scheduling round trip, the fixed cost of a small batch.
+    This 160-row fixture (exact groups, near-duplicate PNG/JPEG pairs,
+    containment pairs and decoys) ran 50 jobs in each of 20 runs, five
+    per session in two sessions each at ``local[4]`` and ``local[12]``
+    (spread 0); the bound holds it there."""
+    from yadf_spark.plans.checkpoint import Checkpointer
+
+    imgs = images.images_df(spark, 160, seed=7)
+    sc = spark.sparkContext
+    group = "fused-pipeline-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        res = pipeline.near_dup_pipeline(
+            imgs, checkpointer=Checkpointer(spark=spark, workdir=None, eager=False)
+        )
+        res["clusters"].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 50, n_jobs
+
+
 def test_recall_at_scale(spark):
     """The recall gate again at 12.5x the planted corpus (5k images,
     generated distributed) — guards against recall regressions that only

@@ -314,28 +314,6 @@ def test_cross_corpus_pairs_single_shuffle_no_join_when_small(spark):
             assert "sig" not in ln.split("[")[0], ln
 
 
-def test_bpe_encode_scans_are_merge_count_independent(spark, docs):
-    """bpe_encode's per-merge folds must run over the (checkpointed)
-    distinct-word frame, never rescanning the corpus: the number of
-    parquet scans in the physical plan is small and IDENTICAL for 2
-    merges and 8 merges — a per-merge corpus rescan would grow it
-    linearly and be catastrophic at 100 TB."""
-    from yadf_spark.operators import curation
-
-    def scans(n_merges):
-        merges = [("e", "</w>"), ("t", "h"), ("a", "n"), ("i", "s"),
-                  ("o", "n"), ("e", "r"), ("a", "l"), ("t", "e")][:n_merges]
-        out = curation.bpe_encode(docs, merges, "doc_id", "text")
-        plan = _formatted(out)
-        return plan.count("Scan parquet")
-
-    two, eight = scans(2), scans(8)
-    assert two == eight, (two, eight)
-    # constant small scan count (explode, join probe, id spine — the
-    # vocab side reads its eager checkpoint, not parquet)
-    assert two <= 4, two
-
-
 def test_cluster_quality_no_corpus_collect_and_single_cell_agg(spark, docs):
     """The evaluation report aggregates contingency CELLS — the joined
     frame is grouped once and the marginals read the cell aggregates

@@ -1,9 +1,8 @@
 """yadf_spark — a PySpark-native near-duplicate detection & clustering engine.
 
 A from-scratch re-imagining of the capabilities of jRimbault/yadf ("Yet
-Another Dupes Finder", reference at /root/reference) as an idiomatic Spark
-pipeline, generalized to near-duplicate detection over a table of
-image + caption pairs:
+Another Dupes Finder") as an idiomatic Spark pipeline, generalized to
+near-duplicate detection over a table of image + caption pairs:
 
 * exact duplicate groups via a staged group-by-refinement ladder
   (size -> prefix hash -> suffix hash -> full hash), mirroring the
@@ -16,9 +15,11 @@ image + caption pairs:
   PSNR), and connected-components clustering;
 * a streaming ingest gate: micro-batches checked against an on-disk
   band index of everything already ingested;
-* training-data curation over text tables: exact + fuzzy text dedup,
-  language id, quality scoring, token counting, fingerprinting, and
-  leakage-guarded cluster-safe splits.
+* training-data curation over text tables: the ``curate`` mode's
+  C4 cleaning -> exact text dedup -> content-addressed split -> packing
+  recipe, plus text operators (fuzzy decontamination, language id,
+  quality scoring, data mixing, DSIR resampling) that only the driver
+  contract exercises.
 
 Everything is DataFrame API + column expressions + vectorized
 pandas/Arrow UDFs. No per-row Python in any hot path.

@@ -171,16 +171,3 @@ def winnow_fingerprints(text: Column, k: int = 8, w: int = 4, algo: str = "xxhas
     # short arrays: trailing zip fields are null; least() ignores nulls
     mins = F.transform(zipped, lambda s: F.least(*[s[f"h{i}"] for i in range(w)]))
     return F.array_sort(F.array_distinct(mins))
-
-
-#: BPE-style pre-tokenization pattern (GPT-2-family shape: common
-#: English contractions, letter runs, digit runs, punctuation runs) —
-#: kept within the regex subset Java (Spark), PCRE (DuckDB) and Python
-#: interpret identically so the oracle reproduces token-for-token.
-BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)|[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
-
-
-def bpe_tokens(text: Column) -> Column:
-    """BPE-ish subword pre-tokens (the unit an actual BPE merge table
-    would operate on)."""
-    return F.regexp_extract_all(text, F.lit(BPE_PATTERN), 0)

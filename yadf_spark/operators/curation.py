@@ -1268,8 +1268,8 @@ def repeated_spans(
       broadcasts it when small and skew-splits it when a viral window
       dominates.
     * span merge is a per-document window (lag + running-group cumsum,
-      the sessionize idiom from operators/temporal.py) — bounded by one
-      document's own window count, never corpus-wide.
+      the gap-sessionization idiom) — bounded by one document's own
+      window count, never corpus-wide.
 
     ``algo="md5"`` keys windows portably so a DuckDB oracle replays the
     verdicts bit-for-bit; the default ``xxhash64`` stays 8 bytes wide.
@@ -1410,140 +1410,8 @@ def strip_repeated_spans(
 
 
 # ---------------------------------------------------------------------------
-# HTML boilerplate stripping (web-corpus text extraction)
+# C4 heuristic cleaning (web-corpus line rules)
 # ---------------------------------------------------------------------------
-
-#: character entities decoded after tag removal; '&amp;' must come LAST
-#: so '&amp;lt;' decodes to the literal '&lt;' and not to '<'
-_HTML_ENTITIES = (
-    ("&lt;", "<"),
-    ("&gt;", ">"),
-    ("&quot;", '"'),
-    ("&#39;", "'"),
-    ("&apos;", "'"),
-    ("&nbsp;", " "),
-    ("&amp;", "&"),
-)
-
-
-def strip_html(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Extract plain text from HTML payloads — the step before every
-    other text-curation operator when the corpus is raw web crawl
-    (the C4/CCNet pipelines run exactly this shape first).
-
-    Output: ``(id, clean_text, title, n_tags)`` — script/style blocks
-    dropped whole, remaining tags replaced by spaces, the common
-    character entities decoded, whitespace collapsed; ``title`` is the
-    first <title> element's text (null when absent), ``n_tags`` the
-    count of tags removed (a page-complexity signal for quality
-    filters). Null text passes through null.
-
-    Scale shape: a pure column-expression chain (regexp_replace /
-    regexp_extract + a fixed entity-decode ladder) — zero shuffles,
-    zero Python, whole-stage codegen end to end, exactly like
-    ``char_class_stats``. Every regex stays inside the RE2 subset
-    (no backreferences, no lookaround) so a DuckDB oracle replays the
-    extraction bit-for-bit.
-    """
-    text = F.col(text_col)
-    # 1. script/style elements go whole — their CONTENT is not text
-    no_blocks = F.regexp_replace(
-        F.regexp_replace(text, r"(?is)<script\b[^>]*>.*?</script>", " "),
-        r"(?is)<style\b[^>]*>.*?</style>",
-        " ",
-    )
-    title = F.nullif(
-        F.regexp_extract(no_blocks, r"(?is)<title[^>]*>(.*?)</title>", 1), F.lit("")
-    )
-    n_tags = F.regexp_count(no_blocks, F.lit(r"<[^>]+>"))
-    detagged = F.regexp_replace(no_blocks, r"<[^>]+>", " ")
-    for ent, ch in _HTML_ENTITIES:
-        detagged = F.replace(detagged, F.lit(ent), F.lit(ch))
-    clean = F.trim(F.regexp_replace(detagged, r"\s+", " "))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.when(text.isNull(), F.lit(None).cast("string")).otherwise(clean).alias("clean_text"),
-        F.when(text.isNull(), F.lit(None).cast("string")).otherwise(title).alias("title"),
-        F.coalesce(n_tags.cast("long"), F.lit(0)).alias("n_tags"),
-    )
-
-
-#: tracking query parameters stripped by URL canonicalization — the
-#: standard analytics noise (Google Analytics utm_*, Facebook fbclid,
-#: Google Ads gclid) that makes one page look like many distinct URLs
-_TRACKING_NAMES = r"(utm_[a-z]+|fbclid|gclid)"
-
-
-def canonical_url(url_col: Column) -> Column:
-    """Canonical form of a URL for URL-level deduplication — the
-    cheapest first-pass dedup key of a web-crawl pipeline (CCNet and
-    Dolma both dedup by normalized URL before any content pass).
-
-    Normalization, in order: drop the fragment; lowercase the
-    scheme+authority (the path stays case-sensitive, per RFC 3986);
-    drop explicit default ports (``:80`` for http, ``:443`` for
-    https); drop a leading ``www.``; strip tracking parameters
-    (``utm_*``, ``fbclid``, ``gclid``) — ``&``-separated ones first,
-    then a leading ``?param&`` re-anchors the next parameter, then a
-    lone ``?param`` drops whole — so a ``&`` that is part of the PATH
-    of a query-less URL is never touched; drop dangling ``?``/``&``
-    and a trailing slash. A URL without a scheme passes through these
-    steps unchanged except for the generic ones (fragment/params/
-    slash). One documented over-reach: a literal ``&utm_...=`` inside
-    a path (legal per RFC, never seen in practice) is stripped as if
-    it were a parameter.
-
-    Scale shape: a chained ``regexp_replace`` column expression — a
-    narrow map in whole-stage codegen, zero shuffles, zero Python, so
-    it runs at scan speed over any corpus size. Every pattern stays
-    in the RE2 subset (no lookaround, no backreference *matching*) so
-    a DuckDB oracle replays the chain bit-for-bit.
-    """
-    u = F.regexp_replace(url_col, r"#.*$", "")
-    # lowercase scheme://authority only — extract the prefix, lower it,
-    # re-attach the untouched path/query
-    pre = F.lower(F.regexp_extract(u, r"^([^/?#]*://[^/?#]*)", 1))
-    rest = F.regexp_replace(u, r"^[^/?#]*://[^/?#]*", "")
-    u = F.concat(pre, rest)
-    u = F.regexp_replace(u, r"^(https://[^/:?#]*):443([/?#]|$)", "$1$2")
-    u = F.regexp_replace(u, r"^(http://[^/:?#]*):80([/?#]|$)", "$1$2")
-    u = F.regexp_replace(u, r"^(https?://)www\.", "$1")
-    # &-separated tracking params (a global pass handles consecutive
-    # ones: each match ends at the next '&'), then a LEADING ?param&
-    # re-anchors its successor, then a lone leading ?param drops whole
-    u = F.regexp_replace(u, r"&" + _TRACKING_NAMES + r"=[^&#]*", "")
-    u = F.regexp_replace(u, r"\?" + _TRACKING_NAMES + r"=[^&#]*&", "?")
-    u = F.regexp_replace(u, r"\?" + _TRACKING_NAMES + r"=[^&#]*$", "")
-    u = F.regexp_replace(u, r"[?&]+$", "")
-    u = F.regexp_replace(u, r"/$", "")
-    return u
-
-
-def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
-    """URL-level dedup summary: one row per canonical URL with its
-    duplicate count and the surviving (smallest-id) member —
-    ``(canon_url, n_docs, keeper)``.
-
-    The first dedup stage of a crawl pipeline: collapses protocol /
-    www / tracking-parameter variants of the same page before any
-    content hashing runs. Scale shape: the canonicalization is a
-    narrow map; the group is one ``groupBy`` whose ``count``/``min``
-    partially aggregate map-side, so a viral URL ships one row per
-    partition — never one per occurrence — through the single shuffle
-    (~100 B/row, ids and URLs only; payloads stay behind). Survivors
-    re-attach by a semi-join on ``keeper`` when row payloads are
-    needed, exactly like ``cluster_representatives``.
-    """
-    canon = canonical_url(F.col(url_col))
-    return (
-        df.select(F.col(id_col).alias("id"), canon.alias("canon_url"))
-        .groupBy("canon_url")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min("id").alias("keeper"),
-        )
-    )
-
 
 #: a line must end in terminal punctuation to look like prose (C4 §2.2)
 _TERMINAL_PUNCT_RE = r'[.!?"]$'
@@ -1611,218 +1479,6 @@ def c4_clean(
     )
 
 
-def _bpe_fold(syms_col, left: str, right: str):
-    """ONE greedy left-to-right merge pass over a symbol array as a
-    pure JVM ``aggregate`` fold — the expression the trainer's merge
-    step and the encoder both apply, so a word encodes exactly as
-    training segmented it."""
-    merged = F.lit(left + right)
-    return F.aggregate(
-        syms_col,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_encode_kernel(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Reference BPE encoding of one word: the trainer's greedy
-    left-to-right merge pass applied once per merge IN RANK ORDER
-    (subword-nmt's sequential apply) — the pure-python twin of
-    ``_bpe_fold``, for oracles and tests."""
-    syms = list(word) + ["</w>"]
-    for left, right in merges:
-        out: list[str] = []
-        for x in syms:
-            if out and out[-1] == left and x == right:
-                out[-1] = left + right
-            else:
-                out.append(x)
-        syms = out
-    return syms
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str,
-    text_col: str,
-    lowercase: bool = True,
-) -> DataFrame:
-    """Apply a trained BPE merge table to the corpus —
-    ``(id, n_subwords, subwords)``, ``subwords`` the document's full
-    in-order subword sequence (docs with no tokens report 0 / empty).
-
-    Scale shape mirrors training (``bpe_merges``): each DISTINCT word
-    is encoded once — the per-merge folds are pure JVM array
-    expressions over the vocab-sized frame (zero Python), re-
-    checkpointed every third merge so the plan stays shallow across
-    long merge tables — then the corpus's (id, pos, word) rows join to
-    their subword arrays and a pos-ordered aggregation reassembles
-    each document. The corpus text is scanned once; every per-merge
-    pass is O(vocab), not O(corpus)."""
-    text = F.col(text_col)
-    if lowercase:
-        text = F.lower(text)
-    # same empty-token filter as bpe_merges (trailing-whitespace docs)
-    exploded = df.select(
-        F.col(id_col).alias("id"), F.posexplode(T.tokens(text)).alias("pos", "w")
-    ).filter(F.col("w") != "")
-    vocab = (
-        exploded.select("w")
-        .distinct()
-        .select(
-            "w", F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("syms")
-        )
-        .localCheckpoint(eager=True)
-    )
-    for it, (left, right) in enumerate(merges):
-        vocab = vocab.select("w", _bpe_fold(F.col("syms"), left, right).alias("syms"))
-        if it % 3 == 2:
-            vocab = vocab.localCheckpoint(eager=True)
-    per_doc = (
-        exploded.join(vocab, "w")
-        .groupBy("id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "syms"))),
-                    lambda st: st["syms"],
-                )
-            ).alias("subwords")
-        )
-    )
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(per_doc, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.size("subwords"), F.lit(0)).cast("long").alias("n_subwords"),
-            F.coalesce("subwords", F.array().cast("array<string>")).alias("subwords"),
-        )
-    )
-
-
-def bpe_train_kernel(
-    word_counts: dict[str, int], n_merges: int
-) -> list[tuple[str, str, int]]:
-    """Reference BPE training (Sennrich et al. 2016): greedy
-    most-frequent-adjacent-pair merges over a ``word -> count`` vocab,
-    each word a char sequence ending in the ``</w>`` word marker.
-    Returns ``[(left, right, freq), ...]`` in merge order. Ties break
-    on (freq DESC, pair lexicographic ASC). Module-level pure kernel
-    (the ``pq_lloyd`` pattern) so the distributed trainer and the
-    single-process oracle replay produce identical merge tables."""
-    vocab: dict[tuple[str, ...], int] = {}
-    for w, c in word_counts.items():
-        syms = tuple(list(w) + ["</w>"])
-        vocab[syms] = vocab.get(syms, 0) + c
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        stats: dict[tuple[str, str], int] = {}
-        for syms, c in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                stats[(a, b)] = stats.get((a, b), 0) + c
-        if not stats:
-            break
-        (left, right), freq = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((left, right, freq))
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, c in vocab.items():
-            out: list[str] = []
-            for x in syms:
-                if out and out[-1] == left and x == right:
-                    out[-1] = left + right
-                else:
-                    out.append(x)
-            key = tuple(out)
-            new_vocab[key] = new_vocab.get(key, 0) + c
-        vocab = new_vocab
-    return merges
-
-
-def bpe_merges(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_merges: int = 20,
-    lowercase: bool = True,
-) -> DataFrame:
-    """Distributed BPE tokenizer training over the corpus —
-    ``(rank, left, right, freq)``, one row per learned merge in order.
-
-    Scale shape — the part that matters at 100 TB: the CORPUS is
-    touched exactly once, by the word-count aggregation (explode →
-    partial-agg groupBy, the ``vocabulary`` posture: hot words combine
-    map-side). Every merge iteration then runs over the DISTINCT-WORD
-    vocab frame only — pair extraction and the left-to-right greedy
-    merge are JVM array expressions (``transform``/``aggregate``
-    folds, zero Python), the per-iteration argmax is a 1-row collect
-    (not a corpus collect), and the vocab
-    frame re-localCheckpoints every third round (measured cheaper than
-    per-round eager materialization) so the plan stays shallow across
-    hundreds of merges. BPE's merge sequence is inherently
-    sequential (each merge conditions the next); the distributed win
-    is the vocab aggregation and the per-iteration pair counts, which
-    is where the corpus-sized work lives."""
-    text = F.col(text_col)
-    if lowercase:
-        text = F.lower(text)
-    # filter the empty token T.tokens emits for text ending in
-    # non-space whitespace (trim strips 0x20 only, so 'x\n' splits to
-    # ['x','']) — an empty word is not a vocab entry, and the pure
-    # kernels' whitespace split never produces one
-    words = (
-        df.select(F.explode(T.tokens(text)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    vocab = words.select(
-        F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("syms"),
-        F.col("cnt"),
-    ).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for it in range(n_merges):
-        syms = F.col("syms")
-        pairs = F.filter(
-            F.transform(syms, lambda s, i: F.struct(s.alias("l"), F.get(syms, i + 1).alias("r"))),
-            lambda st: st["r"].isNotNull(),
-        )
-        top = (
-            vocab.select(F.explode(pairs).alias("p"), "cnt")
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("cnt").alias("freq"))
-            .orderBy(F.desc("freq"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, freq = top[0].l, top[0].r, int(top[0].freq)
-        merges.append((left, right, freq))
-        folded = _bpe_fold(syms, left, right)
-        vocab = (
-            vocab.select(folded.alias("syms"), "cnt")
-            .groupBy("syms")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        # truncate lineage every few rounds, not every round: the
-        # per-round eager materialization job costs more than three
-        # rounds of nested fold expressions on the vocab-sized frame
-        if it % 3 == 2:
-            vocab = vocab.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(i + 1, l, r, f) for i, (l, r, f) in enumerate(merges)],
-        "rank int, left string, right string, freq long",
-    )
-
-
 def curate_text_corpus(
     df: DataFrame,
     id_col: str,
@@ -1845,7 +1501,7 @@ def curate_text_corpus(
     2. exact dedup on the CLEANED text (md5 fingerprint, smallest-id
        winner) — boilerplate removal upstream makes more dups visible
        here, which is why dedup runs after cleaning in real pipelines.
-       One partial-agg groupBy + an id join, the ``url_dedup`` shape.
+       One partial-agg groupBy + an id join.
     3. content-addressed ``hash_split`` (repartition/ingest-stable).
     4. ``pack_sequences`` per split shard under ``pack_budget`` tokens.
 

@@ -461,9 +461,9 @@ def near_dup_pipeline(
     if ck.eager or ck.workdir is not None:
         result["metrics"] = ck.metrics()
     else:
-        # lazy checkpointer: Observation.get blocks until the caller's
-        # final action has flowed through — expose metrics as a callable
-        # to invoke AFTER forcing the result
+        # lazy checkpointer: metrics() counts the checkpointed stages, so
+        # calling it before the caller's final action materializes them
+        # early — expose it as a callable to invoke AFTER forcing the result
         result["metrics_fn"] = ck.metrics
     return result
 

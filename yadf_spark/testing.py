@@ -70,23 +70,13 @@ def compare(spark_df, con, sql: str) -> dict:
 
 
 def run_contract(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, dict]:
-    """Run every queries()/oracle_sql() pair like the driver does.
-
-    Points the entry module's CONTRACT_SF_DIR at ``sf_dir`` while
-    building the oracle SQL, so the BPE stored-truth replays
-    (bpe_merges_docs / bpe_encode_docs), the one oracle input still
-    read from CONTRACT_SF_DIR, regenerate against the same tables the
-    Spark queries read — the driver itself runs at the module default
-    (sf0.01) and never needs the override."""
+    """Run every queries()/oracle_sql() pair like the driver does, with
+    the oracle SQL over DuckDB views of the same ``sf_dir`` tables the
+    Spark queries read."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    prev_sf = entrymod.CONTRACT_SF_DIR
-    entrymod.CONTRACT_SF_DIR = sf_dir
-    try:
-        oracles = entrymod.oracle_sql()
-    finally:
-        entrymod.CONTRACT_SF_DIR = prev_sf
+    oracles = entrymod.oracle_sql()
     con = duckdb_con(sf_dir)
     results: dict[str, dict] = {}
     for name, fn in qs.items():
