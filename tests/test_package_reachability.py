@@ -22,6 +22,12 @@ from pathlib import Path
 
 PKG = "yadf_spark"
 PKG_DIR = Path(__file__).resolve().parent.parent / PKG
+#: the CLI, and the streaming package whose ``__all__`` (``dedup_stream``,
+#: ``streaming_near_dup``, ``incremental_near_dup_batch``,
+#: ``compact_band_index``, ``with_content_hash``) is an entry point on
+#: purpose: the streaming ingest surface is a library API that no CLI
+#: mode wraps, and ``compact_band_index`` is the band index's layout
+#: migration
 ROOTS = ("yadf_spark.cli", "yadf_spark.streaming")
 
 #: modules outside the entry points' import graph on purpose
@@ -140,7 +146,7 @@ FUNCTION_CHECK_SKIPPED = {"yadf_spark.fixtures.images", "yadf_spark.testing"}
 #: top-level functions and classes outside the entry points' reach on
 #: purpose, by module
 ALLOWED_UNREACHED_FUNCTIONS = {
-    # the format sniffer multimodal.decode_metadata mirrors; codec tests
+    # the Python reference multimodal.sniffed_format_col is tested against
     "yadf_spark.fixtures.codec": {"sniff_format"},
     # text language id, quality and winnowing: contract queries and tests
     "yadf_spark.functions.text": {
@@ -149,13 +155,8 @@ ALLOWED_UNREACHED_FUNCTIONS = {
         "quality_score",
         "winnow_fingerprints",
     },
-    # audio features and segments: contract queries and tests
-    "yadf_spark.operators.audio": {
-        "audio_feature_values",
-        "audio_features",
-        "encode_fake_audio",
-        "segment_sample",
-    },
+    # the fake audio container's encoder: test and contract fixtures
+    "yadf_spark.operators.audio": {"encode_fake_audio"},
     # curation families outside the ``curate`` mode's path: contract
     # queries and tests
     "yadf_spark.operators.curation": {
@@ -193,30 +194,6 @@ ALLOWED_UNREACHED_FUNCTIONS = {
     "yadf_spark.operators.exact": {"exact_dup_groups"},
     # edit-distance pairs and the anti-join: contract queries and tests
     "yadf_spark.operators.minhash": {"edit_distance_pairs", "near_dup_anti_join"},
-    # image/video/crop/alignment operators outside the image pipeline:
-    # contract queries and tests
-    "yadf_spark.operators.multimodal": {
-        "_pack_bits",
-        "ahash_kernel",
-        "alignment_kernel",
-        "aspect_bucket_assignments",
-        "caption_alignment",
-        "caption_embedding_kernel",
-        "crop_near_dup_pairs",
-        "decode_metadata",
-        "dhash_kernel",
-        "embed_pixels",
-        "encode_fake_video",
-        "ensemble_near_dup_pairs",
-        "format_audit",
-        "image_embedding",
-        "resize_images",
-        "resize_pixels",
-        "tile_phash_kernel",
-        "video_near_dup_pairs",
-        "with_hash_ensemble",
-        "with_tile_phashes",
-    },
     # driver-side references the distributed recall/precision are
     # tested against
     "yadf_spark.operators.pipeline": {
@@ -236,6 +213,15 @@ def _exported(tree: ast.Module) -> set[str]:
     return set()
 
 
+def _root_referenced(stmt: ast.stmt) -> set[str]:
+    """The names a module-body statement references. An assignment's
+    target is not a reference: ``f.attr = ...`` stores into ``f`` and
+    does not make ``f`` reachable. Only the assigned value counts."""
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        return _referenced(stmt.value) if stmt.value is not None else set()
+    return _referenced(stmt)
+
+
 def _referenced(node: ast.AST) -> set[str]:
     """Every ``Name`` and ``Attribute`` name under ``node``."""
     out = set()
@@ -252,12 +238,12 @@ def reached_functions() -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
     ``(module, name)``.
 
     Roots are the module bodies (top-level statements other than
-    definitions) of every module in the entry points' import graph, the
-    ``__all__`` of each entry point, and the whole of each
-    ``perfbench/*.py``. A reached definition reaches every package
-    definition whose name it references; names are matched without
-    resolving scopes, which can only count dead code as reached, never
-    the reverse."""
+    definitions, by ``_root_referenced``) of every module in the entry
+    points' import graph, the ``__all__`` of each entry point, and the
+    whole of each ``perfbench/*.py``. A reached definition reaches every
+    package definition whose name it references; names are matched
+    without resolving scopes, which can only count dead code as reached,
+    never the reverse."""
     by_name: dict[str, list[tuple[str, ast.AST]]] = {}
     bodies: dict[str, list[ast.stmt]] = {}
     exported: set[str] = set()
@@ -269,7 +255,7 @@ def reached_functions() -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
         for s in tree.body:
             if isinstance(s, _DEFS):
                 by_name.setdefault(s.name, []).append((mod, s))
-    todo = [_referenced(s) for m in reached_modules() for s in bodies[m]]
+    todo = [_root_referenced(s) for m in reached_modules() for s in bodies[m]]
     todo += [_referenced(ast.parse(p.read_text(), str(p))) for p in PERFBENCH_DIR.glob("*.py")]
     todo.append(exported)
     reached: set[tuple[str, str]] = set()

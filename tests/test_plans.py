@@ -249,15 +249,19 @@ def test_token_histogram_partial_agg(spark, docs):
     assert "Window" not in plan
 
 
-def test_format_audit_zero_exchange_codegen(spark):
-    """The magic-byte format audit must run at scan speed: a single
-    codegen projection over the source — no exchange, no Python worker,
-    no decode stage."""
-    from __spark_entry__ import _images_mislabelled_parquet
+def test_format_audit_zero_exchange_codegen(spark, tmp_path):
+    """The magic-byte format filter of ``--drop-format-mismatch`` must run
+    at scan speed: codegen over the source — no exchange, no Python
+    worker, no decode stage."""
+    from yadf_spark.fixtures.images import images_df
     from yadf_spark.operators import multimodal as mm
 
-    src = spark.read.parquet(_images_mislabelled_parquet(256))
-    plan = _formatted(mm.format_audit(src))
+    images_df(spark, 64, seed=3).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    # the CLI's filter (cli.py, near-dup mode) over a table with a fmt column
+    sniffed = mm.sniffed_format_col(F.col("bytes"))
+    kept = src.filter((sniffed != F.lit("unknown")) & (F.col("fmt") == sniffed))
+    plan = _formatted(kept.select("image_id", "caption", "phash"))
     assert "Exchange" not in plan
     assert "Python" not in plan and "MapInPandas" not in plan
     assert "* Project" in plan  # one codegen projection over the scan

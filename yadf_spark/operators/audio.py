@@ -1,25 +1,19 @@
-"""Audio column operators — decode / feature-extract / segment-sample
-over opaque ``binary`` payloads.
+"""Audio near-duplicate pairs over opaque ``binary`` payloads — the
+``audio-near-dup`` CLI mode.
 
-Completes the multimodal triad (image: ``multimodal.decode_metadata``,
-video: ``multimodal.frame_sample``) with the audio modality. Same
-design rules as multimodal.py (the 100 TB contract):
-
-* Payload bytes NEVER cross a shuffle — every operator is a narrow map
-  (``mapInPandas`` over Arrow batches) projecting binary into small
-  typed columns; downstream shuffles carry only those.
+* Payload bytes NEVER cross a shuffle — the fingerprint is a narrow map
+  (``mapInPandas`` over Arrow batches) projecting each clip to one
+  64-bit ``afp`` column; the band join and the verify carry only that.
 * Python is batch-vectorized — per-row work is one zlib/numpy call per
   clip (the decode), matching the reference's per-file hash loop shape
   (src/fs/hash.rs:60-69).
 * Real audio libraries (soundfile/librosa/ffmpeg) are absent in this
   container: ``decode_audio`` tries soundfile first and falls back to
-  the deterministic fake container, keyed by magic bytes, so real and
-  fake payloads can coexist in one table. Undecodable payloads degrade
-  to ``ok=false`` quarantine rows rather than failing the job (the
-  reference's error-fallback posture, src/fs.rs:242-262).
-* The feature kernel (``audio_feature_values``) is module-level and
-  pure so the contract harness can replay it single-process as stored
-  ground truth — the same oracle pattern as ``multimodal.embed_pixels``.
+  the deterministic fake container (``encode_fake_audio``), keyed by
+  magic bytes, so real and fake payloads can coexist in one table.
+  Undecodable payloads get a null fingerprint and drop out of the pairs
+  rather than failing the job (the reference's error-fallback posture,
+  src/fs.rs:242-262).
 """
 
 from __future__ import annotations
@@ -76,61 +70,6 @@ def decode_audio(payload: bytes) -> tuple[int, np.ndarray]:
             "use the deterministic fake container "
             "(yadf_spark.operators.audio.encode_fake_audio)"
         ) from exc
-
-
-def audio_feature_values(samples: np.ndarray, sample_rate: int) -> tuple[float, float, int, int]:
-    """The pure feature kernel over ``(n, ch) int16``: (duration_s, rms,
-    peak, zero_crossings) on the channel-mean mono signal. Module-level
-    (not closed over by the UDF) so the contract harness can replay it
-    single-process as stored ground truth for the distributed
-    ``audio_features`` path."""
-    mono = samples.astype(np.float64).mean(axis=1)
-    n = mono.shape[0]
-    duration_s = n / float(sample_rate)
-    rms = float(np.sqrt(np.mean(mono**2))) if n else 0.0
-    # widen before abs: np.abs(int16 -32768) silently wraps to -32768,
-    # under-reporting the peak of hard-clipped real audio
-    peak = int(np.max(np.abs(samples.astype(np.int32)))) if n else 0
-    signs = np.signbit(mono)
-    zero_crossings = int(np.count_nonzero(signs[1:] != signs[:-1])) if n > 1 else 0
-    return duration_s, rms, peak, zero_crossings
-
-
-FEATURES_SCHEMA = (
-    "audio_id string, sample_rate int, n_channels int, n_samples long, "
-    "duration_s double, rms double, peak int, zero_crossings long, ok boolean"
-)
-
-
-def audio_features(df: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes") -> DataFrame:
-    """Decode each payload and emit typed metadata + signal statistics —
-    the audio analog of ``multimodal.decode_metadata``. ``mapInPandas``
-    so undecodable rows still emit a row with ``ok=false`` (a
-    filter-push-down-friendly quarantine flag)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    rate, samples = decode_audio(bytes(payload))
-                    dur, rms, peak, zcr = audio_feature_values(samples, rate)
-                    rows.append(
-                        (rid, rate, samples.shape[1], samples.shape[0], dur, rms, peak, zcr, True)
-                    )
-                except Exception:
-                    rows.append((rid, None, None, None, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "sample_rate", "n_channels", "n_samples",
-                    "duration_s", "rms", "peak", "zero_crossings", "ok",
-                ],
-            )
-
-    return df.select(F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)).mapInPandas(
-        kernel, FEATURES_SCHEMA
-    )
 
 
 def audio_fingerprint_bits(samples: np.ndarray, n_windows: int = 64) -> int:
@@ -191,9 +130,7 @@ def fingerprint_band_table(
     is 65k instead of 256 — at 10^12 rows that is the difference
     between bounded buckets and an all-pairs blowup inside every
     256th-of-the-corpus bucket. Cost: C(8,2) = 28 table rows per id
-    instead of 8; the rows are ~20 B each and the explode is map-side.
-    The table is still a pure function of ``afp``, so batch and
-    streaming index builds can never drift."""
+    instead of 8; the rows are ~20 B each and the explode is map-side."""
     from yadf_spark.functions.hashes import block_band_keys
 
     keys = block_band_keys(F.col("afp"), n_blocks, block_bits, key_blocks)
@@ -201,26 +138,6 @@ def fingerprint_band_table(
         F.col("audio_id").alias("id"),
         F.posexplode(keys),
     ).select("id", F.col("pos").alias("band_idx"), F.col("col").alias("band_hash"))
-
-
-def audio_band_table(
-    df: DataFrame,
-    n_blocks: int = 8,
-    block_bits: int = 8,
-    key_blocks: int = 2,
-    id_col: str = "audio_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Payloads → fingerprint band keys, the audio ``band_fn`` for the
-    incremental streaming index (streaming/dedup.py): each micro-batch's
-    clips band into the same persistent ``(id, band_idx, band_hash)``
-    index the image pipeline uses."""
-    fps = audio_fingerprints(df, id_col, bytes_col).filter(F.col("afp").isNotNull())
-    return fingerprint_band_table(fps, n_blocks, block_bits, key_blocks)
-
-
-#: streaming-index ownership tag (streaming/dedup.py _check_band_fn_tag)
-audio_band_table.band_fn_tag = "audio-energy-fp-v1"
 
 
 def audio_near_dup_pairs(
@@ -263,52 +180,4 @@ def audio_near_dup_pairs(
         .withColumn("hamming", hamming64(F.col("_fa"), F.col("_fb")).cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-SEGMENT_SCHEMA = (
-    "audio_id string, seg_idx int, seg_bytes binary, seg_n_samples int, n_segments int"
-)
-
-
-def segment_sample(
-    df: DataFrame,
-    seg_samples: int,
-    every_n: int = 1,
-    id_col: str = "audio_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Explode clips into fixed-length sampled segments: one output row
-    per kept segment — the audio analog of ``multimodal.frame_sample``
-    (``mapInPandas`` row-expanding map). Each ``seg_bytes`` is a valid
-    fake-audio payload, so the operator composes with ``audio_features``
-    downstream exactly like video frames compose with the image
-    pipeline. Undecodable clips emit one null quarantine row; a
-    DECODABLE zero-length clip has zero segments and emits no rows
-    (same posture as ``multimodal.frame_sample`` — use
-    ``audio_features``' ``ok`` flag for per-clip accounting)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    rate, samples = decode_audio(bytes(payload))
-                except Exception:
-                    rows.append((rid, None, None, None, None))
-                    continue
-                n = samples.shape[0]
-                n_segments = (n + seg_samples - 1) // seg_samples
-                for idx in range(0, n_segments, every_n):
-                    seg = samples[idx * seg_samples : (idx + 1) * seg_samples]
-                    rows.append(
-                        (rid, idx, encode_fake_audio(seg, rate), seg.shape[0], n_segments)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["audio_id", "seg_idx", "seg_bytes", "seg_n_samples", "n_segments"],
-            )
-
-    return df.select(F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)).mapInPandas(
-        kernel, SEGMENT_SCHEMA
     )

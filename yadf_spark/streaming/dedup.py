@@ -29,6 +29,7 @@ sink recipe).
 
 from __future__ import annotations
 
+import dataclasses
 import logging
 import os
 
@@ -39,6 +40,7 @@ _log = logging.getLogger(__name__).warning
 
 from yadf_spark.config import NearDupConfig
 from yadf_spark.functions import hashes
+from yadf_spark.plans.checkpoint import fingerprint
 
 
 def with_content_hash(df: DataFrame, payload_col: str = "bytes", algo: str = "xxhash64") -> DataFrame:
@@ -85,11 +87,10 @@ def incremental_near_dup_batch(
     persistent index, emit candidate pairs, write the batch's bands into
     its own ``batch_id=`` index subdir.
 
-    ``band_fn`` maps the batch to its ``(id, band_idx, band_hash)``
-    bucket-membership table; the default is the image pipeline's
-    phash+MinHash bands. Any modality banding into that shape reuses the
-    whole incremental index unchanged — e.g.
-    ``operators.audio.audio_band_table`` for audio clips.
+    The batch's ``(id, band_idx, band_hash)`` bucket-membership table is
+    the image pipeline's phash+MinHash bands under ``cfg``
+    (``pipeline.candidate_buckets``). ``band_fn``, a function from the
+    batch to that table, replaces it; tests use it to plant buckets.
 
     Each tick computes the batch's band table once and reads the history
     index once (``_touched_history``); the history-join pairs, the
@@ -105,7 +106,7 @@ def incremental_near_dup_batch(
     therefore identical to the first attempt's."""
     cfg = cfg or NearDupConfig()
     spark = batch.sparkSession
-    tag = _band_fn_tag(band_fn)
+    tag = _band_fn_tag(band_fn, cfg)
     # the batch's bands, computed once: the history join, the within-batch
     # expansion and the index write all read them. Eager localCheckpoint,
     # not persist(): AQE starts the pairs write's independent branches
@@ -239,23 +240,35 @@ def compact_band_index(spark, index_dir: str, out_dir: str) -> None:
     )
 
 
-#: marker file at the index root recording WHICH band function (and
-#: version) wrote the index — band values from different functions or
-#: versions are mutually meaningless, and a silent mix would make the
-#: history join miss duplicates without any error (e.g. the round-3
-#: canonical-phash widening from the Klein 4-orbit to full D4 changed
-#: every flip-invariant band value; an old index consulted by the new
-#: code would simply stop matching mirrored reposts)
+#: marker file at the index root recording WHICH banding (function,
+#: version and band-shaping config) wrote the index — band values from
+#: different bandings are mutually meaningless, and a silent mix would
+#: make the history join miss duplicates without any error (plain and
+#: canonical phash bands never match, and neither do MinHash bands
+#: built with another num_perm, bands, shingle_k or seed)
 _BAND_FN_META = "_band_fn_tag"
 
-#: default (image phash + MinHash caption bands) tag
+#: version of the default (image phash + MinHash caption) banding
 _DEFAULT_BAND_TAG = "image-phash-minhash-v1"
 
 
-def _band_fn_tag(band_fn) -> str:
-    if band_fn is None:
-        return _DEFAULT_BAND_TAG
-    return getattr(band_fn, "band_fn_tag", getattr(band_fn, "__name__", "custom"))
+def _band_fn_tag(band_fn, cfg: NearDupConfig) -> str:
+    """The index ownership tag: a custom ``band_fn``'s name, or the
+    default banding's version plus the fingerprint of every ``cfg``
+    field that changes band values. The bucket caps
+    (``salt_bucket_above``, ``max_bucket``) shape pairs, not bands, and
+    stay out of it."""
+    if band_fn is not None:
+        return getattr(band_fn, "__name__", "custom")
+    lsh = dataclasses.asdict(cfg.lsh)
+    del lsh["salt_bucket_above"], lsh["max_bucket"]
+    shape = {
+        "lsh": lsh,
+        "phash_bands": cfg.phash_bands,
+        "phash_band_bits": cfg.phash_band_bits,
+        "flip_invariant": cfg.flip_invariant,
+    }
+    return f"{_DEFAULT_BAND_TAG}:{fingerprint(shape)}"
 
 
 def _tag_path(spark, path: str):
@@ -266,11 +279,11 @@ def _tag_path(spark, path: str):
 
 
 def _check_band_fn_tag(spark, index_dir: str, tag: str) -> None:
-    """Fail fast when the running band function (or its version) is not
-    the one that wrote the existing index. Indexes written before this
-    guard carry no marker; they are accepted as-is (the marker is added
-    on their next batch) — the guard protects every index written from
-    now on, including across the D4 orbit widening."""
+    """Fail fast when the running banding (function, version or
+    band-shaping config) is not the one that wrote the existing index.
+    Indexes written before this guard carry no marker; they are
+    accepted as-is (the marker is added on their next batch) — the guard
+    protects every index written from now on."""
     p, fs, jvm = _tag_path(spark, index_dir)
     if not fs.exists(p):
         return
@@ -283,8 +296,9 @@ def _check_band_fn_tag(spark, index_dir: str, tag: str) -> None:
             f"{existing!r} but this stream bands with {tag!r} — the band "
             "values are mutually meaningless and history matches would be "
             "silently missed. Rebuild the index with the current band "
-            "function (re-band the history corpus into a fresh index_dir, "
-            "or replay the stream from scratch), or run the old function."
+            "function and config (re-band the history corpus into a fresh "
+            "index_dir, or replay the stream from scratch), or run the "
+            "function and config that wrote it."
         )
 
 
@@ -350,8 +364,8 @@ def streaming_near_dup(
     """Wire the incremental near-dup loop onto a streaming DataFrame.
     Returns the started ``StreamingQuery``; callers own its lifecycle
     (``processAllAvailable``/``stop`` in tests, run-forever in prod).
-    ``band_fn`` selects the modality's banding (see
-    ``incremental_near_dup_batch``). ``trigger`` passes through to
+    ``cfg`` and ``band_fn`` pass through to
+    ``incremental_near_dup_batch``. ``trigger`` passes through to
     ``writeStream.trigger`` — the default ``availableNow=True`` drains
     what exists and STOPS (batch-catchup semantics); a run-forever
     deployment over a continuous source passes e.g.
